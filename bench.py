@@ -14,8 +14,8 @@ rich line was ~2.5k chars and arrived start-truncated):
         "queries": {"<name>": sec, ...}, "sf": ...}
 
 2. FINAL line — a <=2000-char record with per-query seconds as an array in
-   ``headline_queries()`` iteration order (the registry order is
-   deterministic; names for index i are the first line's / history's keys)::
+   ``headline_queries()`` iteration order; the name for index i is entry i
+   of ``BENCH_MANIFEST.json``'s ``names`` (see below)::
 
        {"metric": ..., "value": N, "unit": "sec", "sf": ..., "n": K,
         "order": "registry_headline", "q": [sec, ...],
@@ -93,10 +93,10 @@ def main() -> None:
 
     names_list = list(headline)
     names_md5 = hashlib.md5(",".join(names_list).encode()).hexdigest()
+    manifest_path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "BENCH_MANIFEST.json"
+    )
     try:
-        manifest_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_MANIFEST.json"
-        )
         with open(manifest_path, "w") as f:
             json.dump(
                 {
@@ -109,8 +109,12 @@ def main() -> None:
                 indent=1,
             )
             f.write("\n")
-    except OSError:
-        pass
+    except OSError as e:
+        print(
+            f"warning: could not write {manifest_path} ({e}); the names it "
+            "holds may be stale, check names_md5",
+            file=sys.stderr,
+        )
 
     timings: dict[str, float] = {}
     for name, q in headline.items():

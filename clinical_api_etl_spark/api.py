@@ -19,9 +19,10 @@ reference endpoint                             facade method
 =============================================  =================================
 
 Deviations, all declared in SURVEY §2.9: job state has a single source of
-truth (the ledger table — §2.9.7), and job lookups actually return rows
-(§2.9.1). ``build_fastapi_app`` wires the facade to real HTTP routes when
-fastapi is installed (not required — the facade is the contract).
+truth (the job ledger, a sqlite3 store in the warehouse root — §2.9.7), and
+job lookups actually return rows (§2.9.1). ``build_fastapi_app`` wires the
+facade to real HTTP routes when fastapi is installed (not required — the
+facade is the contract).
 """
 
 from __future__ import annotations
@@ -187,9 +188,12 @@ class ClinicalAPI:
         return out
 
     def health(self) -> dict:
-        """GET /health — session liveness."""
-        ok = self.spark.sparkContext._jsc is not None  # noqa: SLF001
-        return _envelope(ok, "healthy" if ok else "spark session down")
+        """GET /health — session liveness and a ledger store that answers."""
+        if self.spark.sparkContext._jsc is None:  # noqa: SLF001
+            return _envelope(False, "spark session down")
+        if not self.ledger.ping():
+            return _envelope(False, "job ledger unavailable")
+        return _envelope(True, "healthy")
 
     def reset(self) -> dict:
         """POST /__test__/reset — S12 test fixture: drop all warehouse

@@ -1,1 +1,1 @@
-"""Job lifecycle: ledger table + batch/streaming pipeline runner."""
+"""Job lifecycle: job ledger (sqlite3 store) + batch/streaming pipeline runner."""

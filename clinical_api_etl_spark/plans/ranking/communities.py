@@ -308,7 +308,7 @@ def _move_rounds_py(
             comdeg[c] = comdeg.get(c, 0) + k
         new_labels = dict(labels)
         for n in deg:
-            if n % 2 != par:
+            if _spark_mod2(n) != par:
                 continue
             kin: dict = {labels[n]: 0}  # own-community candidate row
             for v, w in adj.get(n, ()):

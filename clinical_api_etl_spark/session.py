@@ -21,8 +21,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: Share of physical memory the default driver heap takes: the rest is
+#: headroom for the JVM's off-heap memory, the Python workers and the OS.
+DRIVER_MEM_SHARE = 0.5
+
+
 def _cpus() -> str:
     return os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
+
+
+def _driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else half of physical RAM."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{int(phys_mb * DRIVER_MEM_SHARE)}m"
 
 
 def get_spark(
@@ -45,7 +58,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_mem())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -12,7 +12,11 @@ upserts (db.py:60-67). Here each becomes a set-based join:
 * ``merge_aggregations`` — full-outer merge with the reference's declared
   asymmetry (§2.9.3): cnt/avg replaced by the new job's values,
   min/max merged across history via LEAST/GREATEST.
-* ``upsert`` — last-write-wins full-outer merge (job ledger, participants).
+* ``upsert`` — last-write-wins full-outer merge (participants).
+
+The job ledger's ``etl_jobs`` is not a parquet table: ``read`` and
+``upsert`` hand it to ``JobLedger`` (``jobs/ledger.py``), which owns its
+store.
 
 Merges are **partition-scoped** where the layout allows it: when the merge
 key contains the table's partition column, only the partition directories
@@ -52,14 +56,13 @@ from pyspark.sql import functions as F
 #: The SURVEY §4/§7 blueprint layout: bronze partitioned by ingestion job
 #: (per-job pruning for re-ingest anti-joins and the data API's job reads),
 #: silver/gold/participants by study (the reference's leading index
-#: column), the job ledger by job id. Every merge target's key contains
-#: its partition column, so all merges run partition-scoped.
+#: column). Every merge target's key contains its partition column, so all
+#: merges run partition-scoped.
 CLINICAL_PARTITIONING = {
     "staging_clinical_measurements": ["job_id"],
     "processed_measurements": ["study_id"],
     "measurement_aggregations": ["study_id"],
     "participants": ["study_id"],
-    "etl_jobs": ["id"],
 }
 
 
@@ -158,9 +161,10 @@ class ParquetWarehouse:
         return self.root / table
 
     def reset(self) -> None:
-        """S12: drop every table (the reference's test-reset endpoint,
-        main.py:40-45 — broken as shipped since its reset.sql is absent
-        from the repo; corrected semantics implemented here)."""
+        """S12: drop every table, the job ledger's store included (the
+        reference's test-reset endpoint, main.py:40-45 — broken as shipped
+        since its reset.sql is absent from the repo; corrected semantics
+        implemented here)."""
         with self._commit_guard():
             # Children only — unlinking .writer.lock while a process holds
             # (or is blocked on) its inode would let a later opener acquire
@@ -185,6 +189,13 @@ class ParquetWarehouse:
             self.root.glob(f"{table}.old-*")
         )
 
+    def _job_ledger(self, table: str):
+        """The ``JobLedger`` when ``table`` is the job ledger's, else None:
+        the one place this warehouse routes a table away from parquet."""
+        from clinical_api_etl_spark.jobs.ledger import JOBS_TABLE, JobLedger
+
+        return JobLedger(self) if table == JOBS_TABLE else None
+
     def read(self, table: str) -> DataFrame | None:
         """Read a table, tolerating a concurrent merge's directory swap.
 
@@ -195,7 +206,12 @@ class ParquetWarehouse:
         and the absent-directory path retry; ``None`` is returned only
         when absence persists with no swap in flight. The Delta/Iceberg
         swap-out removes this entirely via snapshot isolation.
+
+        The job ledger's table comes from its own store, as a local frame.
         """
+        ledger = self._job_ledger(table)
+        if ledger is not None:
+            return ledger.all_jobs()
         last: Exception | None = None
         for _ in range(4):
             if self.exists(table):
@@ -314,7 +330,12 @@ class ParquetWarehouse:
 
         Partition-scoped when the key covers the partition column: only
         partitions present in ``df`` are read back, merged and swapped.
+        The job ledger's rows (keyed by id) go to its own store.
         """
+        ledger = self._job_ledger(table)
+        if ledger is not None:
+            ledger.put(df.collect())
+            return
         with self._commit_guard():
             existing = self.read(table)
             if existing is None:

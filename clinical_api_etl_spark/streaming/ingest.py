@@ -14,7 +14,9 @@ the Spark-native form is a **file-source stream over a drop folder**:
   analogue of the ``ON CONFLICT`` keys),
 * per-file lineage comes from ``_metadata.file_path`` (input_file_name is
   not available on streaming sources' metadata column is), and job ids are
-  derived per batch.
+  derived per batch from the checkpoint location and the batch id, so two
+  streams into one warehouse never share a job id and a retried batch keeps
+  its own.
 
 At scale this is the continuous-ingestion story: thousands of files/hour
 land in the drop folder; maxFilesPerTrigger bounds batch size; the
@@ -22,6 +24,9 @@ quality/gold stages aggregate per micro-batch exactly like per-job.
 """
 
 from __future__ import annotations
+
+import hashlib
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,8 +56,17 @@ STREAM_SCHEMA = T.StructType(
 )
 
 
-def _process_batch(wh: ParquetWarehouse, batch_df: DataFrame, batch_id: int) -> None:
-    """One micro-batch = one logical job, keyed ``stream-<batch_id>``.
+def stream_job_id(checkpoint_dir: str, batch_id: int) -> str:
+    """``stream-<checkpoint tag>-<batch_id>``: the tag hashes the resolved
+    checkpoint location, which identifies the query across restarts, so
+    the id is the same when a batch is retried and differs between two
+    streams into one warehouse."""
+    loc = checkpoint_dir if "://" in checkpoint_dir else os.path.realpath(checkpoint_dir)
+    return f"stream-{hashlib.sha1(loc.encode()).hexdigest()[:12]}-{batch_id}"
+
+
+def _process_batch(wh: ParquetWarehouse, batch_df: DataFrame, job_id: str) -> None:
+    """One micro-batch = one logical job, keyed ``job_id``.
 
     The whole batch is staged in ONE pass regardless of how many files it
     spans: ``row_num`` lineage restarts per file via a window partitioned
@@ -64,7 +78,6 @@ def _process_batch(wh: ParquetWarehouse, batch_df: DataFrame, batch_id: int) -> 
         return
     from clinical_api_etl_spark.jobs.ledger import JobLedger
 
-    job_id = f"stream-{batch_id}"
     batch = batch_df.withColumn(
         "_src", F.element_at(F.split(F.col("_source_file"), "/"), -1)
     )
@@ -85,9 +98,8 @@ def _run_batch(wh: ParquetWarehouse, batch: DataFrame, job_id: str) -> None:
     """One pass over every file in the trigger: stage → silver → quality →
     gold, each sink written once. Every write is keyed-idempotent (bronze/
     silver/quality by natural key, gold via the S8 merge), so a retried
-    micro-batch under the same ``stream-<batch_id>`` job id re-writes
-    nothing — including the quality report (ADVICE: previously a plain
-    append that duplicated on retry)."""
+    micro-batch under the same job id re-writes nothing — including the
+    quality report, which is keyed on (job_id, rule_name)."""
     raw = batch.select(
         *[F.coalesce(F.col(c), F.lit("")).alias(c) for c in CSV_COLUMNS],
         F.col("_src"),
@@ -133,7 +145,7 @@ def run_ingest_stream(
     )
     writer = (
         stream.writeStream.foreachBatch(
-            lambda df, bid: _process_batch(wh, df, bid)
+            lambda df, bid: _process_batch(wh, df, stream_job_id(checkpoint_dir, bid))
         )
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")

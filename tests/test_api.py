@@ -107,6 +107,28 @@ def test_reset_clears_all_tables(api):
     assert len(api.get_data()["data"]) == 3
 
 
+def test_reset_empties_job_ledger(api):
+    jid = api.ledger.submit("study.csv")
+    assert api.get_job_status(jid)["data"]["status"] == "pending"
+    _check_envelope(api.reset(), True)
+    assert api.wh.read("etl_jobs") is None
+    _check_envelope(api.get_job_status(jid), False)
+    # the ledger takes submits again after reset
+    jid2 = api.ledger.submit("study.csv")
+    assert api.get_job_status(jid2)["data"]["status"] == "pending"
+
+
+def test_health_fails_when_ledger_store_cannot_open(spark, tmp_path):
+    from clinical_api_etl_spark.jobs.ledger import STORE_FILE
+    from clinical_api_etl_spark.sources.sinks import ParquetWarehouse
+
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    (wh.root / STORE_FILE).mkdir()  # a directory where the database belongs
+    out = ClinicalAPI(spark, wh, str(tmp_path)).health()
+    _check_envelope(out, False)
+    assert "ledger" in out["message"]
+
+
 def test_background_submit_polls_to_completion(spark, warehouse, tmp_path):
     """background=True reproduces the reference's async submit (FastAPI
     BackgroundTasks): the call returns immediately with a pending/running

@@ -242,3 +242,26 @@ class TestLouvainDriverParity:
             C.DRIVER_LOUVAIN_MAX_EDGES = orig
         spark.catalog.clearCache()
         assert fast == slow
+
+
+class TestLouvainSignedNodeIds:
+    def test_driver_equals_distributed_on_signed_ids(self, spark):
+        """Spark's ``%`` follows the dividend's sign, so negative odd node
+        ids never move on the distributed path; the driver replica must
+        leave them in place too (Python's floored ``%`` would move them)."""
+        from clinical_api_etl_spark.plans.ranking import communities as C
+
+        edges = [
+            (-7, 4), (-7, 6), (-5, -3), (-5, -1), (-3, -1), (-3, 4),
+            (-1, 2), (2, 4), (2, 6), (4, 6),
+        ]
+        e0 = spark.createDataFrame(edges, "u long, v long")
+        fast = {r.node: r.community for r in C.louvain_labels(e0).collect()}
+        orig = C.DRIVER_LOUVAIN_MAX_EDGES
+        C.DRIVER_LOUVAIN_MAX_EDGES = -1  # force the distributed path
+        try:
+            slow = {r.node: r.community for r in C.louvain_labels(e0).collect()}
+        finally:
+            C.DRIVER_LOUVAIN_MAX_EDGES = orig
+        spark.catalog.clearCache()
+        assert fast == slow

@@ -85,7 +85,7 @@ class TestIngestStream:
         self, spark, warehouse, tmp_path
     ):
         """ADVICE parity: if a micro-batch fails after the quality append
-        and is retried under the same stream-<batch_id> job id, the quality
+        and is retried under the same job id, the quality
         report must not duplicate — append is keyed on (job_id, rule_name)."""
         from clinical_api_etl_spark.jobs.runner import QUALITY_TABLE
         from clinical_api_etl_spark.streaming.ingest import _run_batch
@@ -389,6 +389,47 @@ class TestStreamLedger:
         assert rows[0]["status"] == "completed"
         assert rows[0]["filename"] == "l1.csv"
         assert rows[0]["completed_at"] is not None
+
+
+class TestTwoStreamsOneWarehouse:
+    def test_stream_job_ids_do_not_collide(self, spark, warehouse, tmp_path):
+        """Two streams, each with its own drop folder and checkpoint, into
+        one warehouse: both batch-0 ledger rows and both sets of quality
+        rows survive (a shared ``stream-<batch_id>`` id dropped the second
+        stream's quality rows and overwrote its ledger row)."""
+        from clinical_api_etl_spark.jobs.runner import QUALITY_TABLE
+        from clinical_api_etl_spark.streaming.ingest import stream_job_id
+
+        (tmp_path / "a").mkdir()
+        (tmp_path / "b").mkdir()
+        drop_a = _drop(tmp_path / "a", "a.csv", [
+            "S1,P1,glucose,95.5,,2024-01-15T09:30:00Z,SITE_A,0.98",  # missing unit
+        ])
+        drop_b = _drop(tmp_path / "b", "b.csv", [
+            "S2,P1,glucose,99,,2024-01-15T09:30:00Z,SITE_B,0.98",  # missing unit
+            "S2,P2,glucose,900,mg/dL,2024-01-15T09:31:00Z,SITE_B,0.98",  # out of range
+        ])
+        ckpt_a, ckpt_b = str(tmp_path / "ckpt_a"), str(tmp_path / "ckpt_b")
+        run_ingest_stream(spark, warehouse, drop_a, ckpt_a)
+        run_ingest_stream(spark, warehouse, drop_b, ckpt_b)
+        jobs = sorted(
+            (r.filename, r.status, r.id) for r in warehouse.read("etl_jobs").collect()
+        )
+        assert [j[:2] for j in jobs] == [("a.csv", "completed"), ("b.csv", "completed")]
+        jid_a, jid_b = stream_job_id(ckpt_a, 0), stream_job_id(ckpt_b, 0)
+        assert [j[2] for j in jobs] == [jid_a, jid_b]
+        quality = sorted(
+            (r.job_id, r.rule_name, r.affected_rows)
+            for r in warehouse.read(QUALITY_TABLE).collect()
+        )
+        assert quality == sorted([
+            (jid_a, "missing_unit_required", 1),
+            (jid_b, "missing_unit_required", 1),
+            (jid_b, "numeric_out_of_range", 1),
+        ])
+        assert warehouse.read(BRONZE_TABLE).count() == 3
+        assert jid_a != jid_b and jid_a.startswith("stream-")
+        assert stream_job_id(ckpt_a, 0) == jid_a  # stable for a retried batch
 
 
 class TestStreamStreamJoin:
