@@ -1,8 +1,8 @@
 """Clinical medallion transforms: bronze → silver → quality / gold / dims.
 
-Pure DataFrame → DataFrame functions (no I/O — sinks live in
-``sources/sinks.py``), each reproducing a declared reference behavior with
-its quirks (SURVEY §2.9) encoded deliberately:
+DataFrame functions with no writes (sinks live in ``sources/sinks.py``),
+each reproducing a declared reference behavior with its quirks (SURVEY
+§2.9) encoded deliberately:
 
 * the gold grain is NOT daily despite the reference's constraint name
   (§2.9.2 — ``etl.py:211`` omits the computed ``day`` column),
@@ -16,14 +16,20 @@ its quirks (SURVEY §2.9) encoded deliberately:
 Everything is a single-pass column expression: the reference's
 row-at-a-time Python loops (``etl.py:109-150``) and per-rule rescans
 (``etl.py:163-194``) become one whole-stage-codegen'd projection and one
-multi-counter aggregate respectively. At 100 TB the silver build is
+multi-counter aggregate respectively. That aggregate is part of the
+job's one check pass over its input (:func:`validate_quality_scores`), so
+the quality report costs no scan of its own. At 100 TB the silver build is
 shuffle-free (narrow transform of bronze); gold is one partial+final hash
-aggregate; quality is one pass with a broadcast bounds dim.
+aggregate.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import operator
+from dataclasses import dataclass
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -38,6 +44,7 @@ from clinical_api_etl_spark.functions.clinical import (
     normalize_quality_score,
     to_decimal_expr,
 )
+from clinical_api_etl_spark.sources.clinical_csv import SOURCE_COLUMN
 
 #: Silver natural key — unique constraint ``uq_pm_obs``
 #: (database/05_processed_measurements.sql:19).
@@ -46,26 +53,59 @@ SILVER_KEY = ("study_id", "participant_id", "measurement_type", "measured_at", "
 #: Gold grain — per §2.9.2 the *actual* grain omits day (etl.py:211).
 GOLD_KEY = ("study_id", "participant_id", "site_id", "measurement_type")
 
+#: A3-A5 quality rules and their severities (etl.py:155-195).
+QUALITY_RULES = {
+    "missing_unit_required": "warn",
+    "malformed_blood_pressure": "error",
+    "numeric_out_of_range": "warn",
+}
 
-def validate_quality_scores(raw: DataFrame) -> None:
-    """Reference failure parity: a non-sentinel ``quality_score`` that is
-    not a float (``float(qs)`` raises — etl.py:93) or falls outside [0,1]
-    (staging CHECK constraint, 02_staging_clinical_trials.sql:13) fails the
-    WHOLE job before anything is written — the reference's per-batch insert
+
+@dataclass(frozen=True)
+class InputChecks:
+    """What the one pass over a job's input found; ``error`` is why it fails."""
+
+    rows: int
+    files: tuple[str, ...]
+    error: str | None
+    rule_counts: dict[str, int]
+
+
+def validate_quality_scores(raw: DataFrame) -> InputChecks:
+    """The job's one pass over its normalised input, before anything is
+    written, as one Spark job (the metrics ride a no-op write): row count,
+    source files, S3 blank-``study_id`` count, first invalid
+    ``quality_score`` in input order, and the three rule counters.
+
+    Reference failure parity: a non-sentinel ``quality_score`` that is not a
+    float (``float(qs)`` raises — etl.py:93) or falls outside [0,1] (staging
+    CHECK constraint, 02_staging_clinical_trials.sql:13) fails the WHOLE
+    job before anything is written — the reference's per-batch insert
     transaction rolls back, so no partial state survives."""
-    from clinical_api_etl_spark.sources.clinical_csv import ClinicalCsvError
-
     qs = F.trim(F.col("quality_score"))
-    non_sentinel = ~qs.isin("", "null") & qs.isNotNull()
     as_num = qs.try_cast("double")
-    bad = non_sentinel & (
+    bad = ~qs.isin("", "null") & (
         as_num.isNull() | F.isnan(as_num) | (as_num < 0.0) | (as_num > 1.0)
     )
-    offender = raw.filter(bad).select("quality_score").limit(1).collect()
-    if offender:
-        raise ClinicalCsvError(
-            f"invalid quality_score {offender[0][0]!r}: must be a float in [0, 1]"
-        )
+    seen = Observation()
+    raw.withColumn("_ord", F.monotonically_increasing_id()).observe(
+        seen,
+        F.count(F.lit(1)).alias("rows"),
+        F.collect_set(SOURCE_COLUMN).alias("files"),
+        F.count_if(F.trim("study_id") == "").alias("blank_study_ids"),
+        F.min_by("quality_score", F.when(bad, F.col("_ord"))).alias("bad_quality_score"),
+        *[F.count_if(cond).alias(rule) for rule, cond in _quality_rules().items()],
+    ).write.format("noop").mode("overwrite").save()
+    m = seen.get
+    # A blank study_id wins: the reference rejects it on read (etl.py:66-70),
+    # before staging parses any quality_score (etl.py:93).
+    error = None
+    if m["blank_study_ids"]:
+        error = "study_id is required for all rows and cannot be blank"
+    elif m["bad_quality_score"] is not None:
+        error = f"invalid quality_score {m['bad_quality_score']!r}: must be a float in [0, 1]"
+    rule_counts = {rule: m[rule] for rule in QUALITY_RULES}
+    return InputChecks(m["rows"], tuple(sorted(m["files"])), error, rule_counts)
 
 
 def stage_bronze(raw: DataFrame, job_id: str, source_filename: str | Column) -> DataFrame:
@@ -179,63 +219,44 @@ def build_silver(bronze: DataFrame) -> DataFrame:
     )
 
 
-def quality_counts(raw: DataFrame, job_id: str) -> DataFrame:
-    """A3-A5: the three rule counters, one pass over the raw *input* rows
-    (§2.9.5 — the reference computes these on the pre-staging df,
-    etl.py:155-195). Returns only rules with affected_rows > 0, matching
-    the reference's conditional appends.
+def _quality_rules() -> dict[str, Column]:
+    """A3-A5: each rule's condition on a raw *input* row (§2.9.5 — the
+    reference computes these on the pre-staging df, etl.py:155-195).
 
     Rule 3 uses the full RANGES dict including the dead
     ``blood_pressure_1/_2`` entries — they can never equal a bronze
     ``measurement_type``, which is exactly the reference's (buggy but
     declared) behavior.
     """
-    value_num = to_decimal_expr(F.col("value")).cast("double")
-    missing_unit = F.col("measurement_type").isin(*REQ_UNIT) & (
-        F.trim(F.col("unit")) == ""
-    )
-    bad_bp = (F.col("measurement_type") == "blood_pressure") & ~bp_is_valid(
-        F.col("value")
-    )
-    range_when = None
-    for mtype, (lo, hi) in RANGES.items():
-        cond = (
-            (F.col("measurement_type") == mtype)
-            & value_num.isNotNull()
-            & ((value_num < lo) | (value_num > hi))
-        )
-        range_when = cond if range_when is None else (range_when | cond)
+    mtype, value = F.col("measurement_type"), F.col("value")
+    value_num = to_decimal_expr(value).cast("double")
+    out_of_range = [
+        (mtype == t) & value_num.isNotNull() & ((value_num < lo) | (value_num > hi))
+        for t, (lo, hi) in RANGES.items()
+    ]
+    return {
+        "missing_unit_required": mtype.isin(*REQ_UNIT) & (F.trim("unit") == ""),
+        "malformed_blood_pressure": (mtype == "blood_pressure") & ~bp_is_valid(value),
+        "numeric_out_of_range": reduce(operator.or_, out_of_range),
+    }
 
-    counters = raw.agg(
-        F.sum(F.when(missing_unit, 1).otherwise(0)).cast("long").alias("missing_unit_required"),
-        F.sum(F.when(bad_bp, 1).otherwise(0)).cast("long").alias("malformed_blood_pressure"),
-        F.sum(F.when(range_when, 1).otherwise(0)).cast("long").alias("numeric_out_of_range"),
-    )
-    rules = F.array(
+
+def quality_counts(spark: SparkSession, rule_counts: dict[str, int], job_id: str) -> DataFrame:
+    """The quality report rows from the counters of the check pass
+    (``InputChecks.rule_counts``), as literals: no scan of their own and no
+    local data shipped to the JVM. Returns only rules with affected_rows >
+    0, matching the reference's conditional appends."""
+    rules = F.array(*[
         F.struct(
-            F.lit("missing_unit_required").alias("rule_name"),
-            F.lit("warn").alias("severity"),
-            F.col("missing_unit_required").alias("affected_rows"),
-        ),
-        F.struct(
-            F.lit("malformed_blood_pressure").alias("rule_name"),
-            F.lit("error").alias("severity"),
-            F.col("malformed_blood_pressure").alias("affected_rows"),
-        ),
-        F.struct(
-            F.lit("numeric_out_of_range").alias("rule_name"),
-            F.lit("warn").alias("severity"),
-            F.col("numeric_out_of_range").alias("affected_rows"),
-        ),
-    )
-    return (
-        counters.select(F.explode(rules).alias("r"))
-        .select(
-            F.lit(job_id).alias("job_id"),
-            F.col("r.rule_name").alias("rule_name"),
-            F.col("r.severity").alias("severity"),
-            F.col("r.affected_rows").alias("affected_rows"),
+            F.lit(rule).alias("rule_name"),
+            F.lit(severity).alias("severity"),
+            F.lit(rule_counts[rule]).cast("long").alias("affected_rows"),
         )
+        for rule, severity in QUALITY_RULES.items()
+    ])
+    return (
+        spark.range(1)
+        .select(F.lit(job_id).alias("job_id"), F.inline(rules))
         .filter(F.col("affected_rows") > 0)
     )
 

@@ -7,20 +7,20 @@ Reproduces the reference's validated-on-read contract
 * empty CSV fields are empty *strings*, not NULLs (`keep_default_na=False`)
   — Spark's CSV reader yields NULL for empty fields, so we coalesce back,
 * hard failure if any required column is missing,
-* hard failure if any ``study_id`` is blank after trim,
 * optional ``quality_score`` column added as ``""`` when absent,
 * ``unit`` trimmed on read.
 
-Scale: schema is fixed (8 string fields) so the scan never pays inference;
-the two validation guards are cheap short-circuit actions (``limit(1)``)
-that run before any downstream work is scheduled.
+The row checks (blank ``study_id``, invalid ``quality_score``) run later,
+in the one pass over the input that uploads and stream batches share
+(``operators.clinical.validate_quality_scores``).
 """
 
 from __future__ import annotations
 
+import os
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 CSV_COLUMNS = (
@@ -36,6 +36,9 @@ CSV_COLUMNS = (
 
 #: Required-column set (reference etl.py:29).
 REQUIRED = frozenset(CSV_COLUMNS) - {"quality_score"}
+
+#: Column naming each input row's source file (the bronze ``source_filename``).
+SOURCE_COLUMN = "_src"
 
 
 class ClinicalCsvError(ValueError):
@@ -55,8 +58,19 @@ def validate_path(path: str, root: str | None = None) -> Path:
     return p
 
 
+def normalize_input(df: DataFrame, source: Column) -> DataFrame:
+    """The eight string columns as the reference reads them, plus
+    :data:`SOURCE_COLUMN` from ``source``. pandas ``keep_default_na=False``
+    parity: an empty field is an empty string, not NULL; ``unit`` trimmed."""
+    return df.select(
+        *[F.coalesce(F.col(c), F.lit("")).alias(c) for c in CSV_COLUMNS],
+        source.alias(SOURCE_COLUMN),
+    ).withColumn("unit", F.trim("unit"))
+
+
 def read_clinical_csv(spark: SparkSession, path: str, *, root: str | None = None) -> DataFrame:
-    """S1-S3: all-string CSV read with required-column and blank-key guards."""
+    """S1-S2: all-string CSV read with the required-column guard; the
+    source column holds the file's name."""
     validate_path(path, root)
     df = spark.read.option("header", True).csv(path)  # header=True, no inference: all strings
 
@@ -66,11 +80,4 @@ def read_clinical_csv(spark: SparkSession, path: str, *, root: str | None = None
 
     if "quality_score" not in df.columns:
         df = df.withColumn("quality_score", F.lit(""))
-
-    # pandas keep_default_na=False parity: empty field == empty string.
-    df = df.select([F.coalesce(F.col(c), F.lit("")).alias(c) for c in CSV_COLUMNS])
-    df = df.withColumn("unit", F.trim("unit"))
-
-    if df.filter(F.trim("study_id") == "").limit(1).count() > 0:
-        raise ClinicalCsvError("study_id is required for all rows and cannot be blank")
-    return df
+    return normalize_input(df, F.lit(os.path.basename(path)))

@@ -131,8 +131,8 @@ class ParquetWarehouse:
         ``SnapshotWarehouse._commit`` — ``os.link`` is atomic
         create-if-absent on POSIX filesystems including NFSv3+ — which
         turns a cross-host race into a clean ``CommitConflict`` retry
-        rather than a lost update. Plain ``ParquetSink`` directory swaps
-        carry no such backstop: keep multi-host writers on the
+        rather than a lost update. ``ParquetWarehouse``'s own directory
+        swaps carry no such backstop: keep multi-host writers on the
         SnapshotWarehouse path.
         """
         with self._write_lock:

@@ -20,6 +20,7 @@ from clinical_api_etl_spark.jobs.runner import (
     SILVER_TABLE,
     process_job,
 )
+from clinical_api_etl_spark.operators.clinical import validate_quality_scores
 from clinical_api_etl_spark.sources.clinical_csv import ClinicalCsvError, read_clinical_csv
 
 HEADER = "study_id,participant_id,measurement_type,value,unit,timestamp,site_id,quality_score"
@@ -72,8 +73,7 @@ class TestCsvValidation:
 
     def test_blank_study_id_fails(self, spark, tmp_path):
         path = _write_csv(tmp_path, "blank.csv", ["  ,P1,glucose,95,mg/dL,2024-01-01T00:00:00Z,SITE_A,"])
-        with pytest.raises(ClinicalCsvError, match="study_id"):
-            read_clinical_csv(spark, path)
+        assert "study_id" in validate_quality_scores(read_clinical_csv(spark, path)).error
 
     def test_optional_quality_score_added(self, spark, tmp_path):
         p = tmp_path / "noq.csv"
@@ -241,6 +241,56 @@ class TestFailureMarksJob:
         assert job["status"] == "failed"
         assert "study_id" in job["message"]
         assert job["completed_at"] is not None
+
+
+class TestOneCheckPass:
+    def test_check_pass_is_one_spark_job(self, spark, tmp_path):
+        """The blank-key check, the quality_score check and the three rule
+        counters of one upload share one Spark job."""
+        import uuid
+
+        raw = read_clinical_csv(spark, _write_csv(tmp_path, "one.csv", HAPPY + BP + EDGE))
+        sc = spark.sparkContext
+        group = f"check-pass-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "check pass")
+        try:
+            checks = validate_quality_scores(raw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        assert (checks.rows, checks.files, checks.error) == (16, ("one.csv",), None)
+        assert checks.rule_counts == {
+            "missing_unit_required": 1,
+            "malformed_blood_pressure": 3,
+            "numeric_out_of_range": 2,
+        }
+
+    def test_blank_study_id_wins_over_bad_quality_score(self, spark, warehouse, tmp_path):
+        bad_score = "S1,P1,glucose,95,mg/dL,2024-01-01T00:00:00Z,SITE_A,abc"
+        only = _write_csv(tmp_path, "score.csv", [bad_score])
+        assert "'abc'" in validate_quality_scores(read_clinical_csv(spark, only)).error
+        path = _write_csv(tmp_path, "both.csv", [
+            bad_score,
+            " ,P2,glucose,96,mg/dL,2024-01-01T00:00:00Z,SITE_A,0.5",
+        ])
+        with pytest.raises(ClinicalCsvError, match="study_id"):
+            process_job(spark, warehouse, path, job_id="job-both")
+        assert warehouse.read(BRONZE_TABLE) is None
+
+
+class TestQuotedJobId:
+    def test_job_id_with_quote_lands_rows(self, spark, warehouse, tmp_path):
+        """The bronze read-back filters by column, not by an interpolated
+        SQL string, so any caller-supplied job id works."""
+        path = _write_csv(tmp_path, "quote.csv", HAPPY)
+        jid = process_job(spark, warehouse, path, job_id="o'brien-1")
+        assert jid == "o'brien-1"
+        assert warehouse.read("etl_jobs").collect()[0]["status"] == "completed"
+        bronze = warehouse.read(BRONZE_TABLE)
+        assert bronze.filter(bronze.job_id == jid).count() == 6
+        silver = warehouse.read(SILVER_TABLE)
+        assert silver.filter(silver.job_id == jid).count() == 6
 
 
 class TestPartitionedWarehouse:

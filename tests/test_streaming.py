@@ -87,19 +87,17 @@ class TestIngestStream:
         """ADVICE parity: if a micro-batch fails after the quality append
         and is retried under the same job id, the quality
         report must not duplicate — append is keyed on (job_id, rule_name)."""
-        from clinical_api_etl_spark.jobs.runner import QUALITY_TABLE
-        from clinical_api_etl_spark.streaming.ingest import _run_batch
+        from clinical_api_etl_spark.jobs.runner import QUALITY_TABLE, run_pipeline
+        from clinical_api_etl_spark.sources.clinical_csv import normalize_input
 
         drop = _drop(tmp_path, "q1.csv", [
             "S1,P1,glucose,95.5,,2024-01-15T09:30:00Z,SITE_A,0.98",  # missing unit
         ])
-        batch = (
-            spark.read.option("header", True).csv(drop)
-            .withColumn("_source_file", F.lit("q1.csv"))
-            .withColumn("_src", F.lit("q1.csv"))
+        batch = normalize_input(
+            spark.read.option("header", True).csv(drop), F.lit("q1.csv")
         )
-        _run_batch(warehouse, batch, "stream-7")
-        _run_batch(warehouse, batch, "stream-7")  # the retry
+        run_pipeline(warehouse, batch, "stream-7", dims=False)
+        run_pipeline(warehouse, batch, "stream-7", dims=False)  # the retry
         quality = warehouse.read(QUALITY_TABLE).filter(F.col("job_id") == "stream-7")
         assert quality.count() == quality.dropDuplicates(["job_id", "rule_name"]).count()
         assert quality.filter(F.col("rule_name") == "missing_unit_required").count() == 1
@@ -389,6 +387,38 @@ class TestStreamLedger:
         assert rows[0]["status"] == "completed"
         assert rows[0]["filename"] == "l1.csv"
         assert rows[0]["completed_at"] is not None
+
+    def test_empty_batch_is_no_job(self, spark, warehouse, tmp_path):
+        """A batch of header-only files has no rows: no ledger row, no writes."""
+        drop = _drop(tmp_path, "empty.csv", [])
+        run_ingest_stream(spark, warehouse, drop, str(tmp_path / "eckpt"))
+        assert warehouse.read("etl_jobs") is None
+        assert warehouse.read(BRONZE_TABLE) is None
+
+
+class TestStreamBlankStudyId:
+    def test_blank_study_id_fails_the_whole_batch(self, spark, warehouse, tmp_path):
+        """Uploads and stream batches share one check pass: a micro-batch
+        with a blank study_id ends failed with the study_id message, and no
+        clinical table gains a row (its valid file included)."""
+        from pyspark.errors import StreamingQueryException
+
+        from clinical_api_etl_spark.jobs.runner import QUALITY_TABLE
+
+        _drop(tmp_path, "ok.csv", [
+            "S1,P1,glucose,95.5,,2024-01-15T09:30:00Z,SITE_A,0.98",  # missing unit
+        ])
+        drop = _drop(tmp_path, "blank.csv", [
+            "S1,P2,glucose,96,mg/dL,2024-01-15T09:31:00Z,SITE_A,0.9",
+            "  ,P3,glucose,97,mg/dL,2024-01-15T09:32:00Z,SITE_A,0.9",
+        ])
+        with pytest.raises(StreamingQueryException, match="study_id"):
+            run_ingest_stream(spark, warehouse, drop, str(tmp_path / "bckpt"))
+        jobs = warehouse.read("etl_jobs").collect()
+        assert [(j.filename, j.status) for j in jobs] == [("blank.csv,ok.csv", "failed")]
+        assert "study_id" in jobs[0].message
+        for table in (BRONZE_TABLE, SILVER_TABLE, QUALITY_TABLE, GOLD_TABLE):
+            assert warehouse.read(table) is None, table
 
 
 class TestTwoStreamsOneWarehouse:
