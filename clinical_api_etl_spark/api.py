@@ -20,9 +20,8 @@ reference endpoint                             facade method
 
 Deviations, all declared in SURVEY §2.9: job state has a single source of
 truth (the job ledger, a sqlite3 store in the warehouse root — §2.9.7), and
-job lookups actually return rows (§2.9.1). ``build_fastapi_app`` wires the
-facade to real HTTP routes when fastapi is installed (not required — the
-facade is the contract).
+job lookups actually return rows (§2.9.1). The facade is the contract;
+no HTTP server is bundled.
 """
 
 from __future__ import annotations
@@ -99,14 +98,14 @@ class ClinicalAPI:
             )
         except ClinicalCsvError as e:
             return _envelope(False, str(e))
-        job_id = str(_uuid.uuid4())
+        # The job's one ledger row, named as the client named the file, is
+        # in place before the job runs or the call returns
+        # (etl.service.ts:28-43).
+        job_id = self.ledger.submit(filename)
         if self.background:
-            t = threading.Thread(
+            threading.Thread(
                 target=self._run_safely, args=(str(path), job_id), daemon=True
-            )
-            # Seed the pending row before returning (etl.service.ts:28-43).
-            self.ledger.submit(filename, job_id=job_id)
-            t.start()
+            ).start()
         else:
             self._run_safely(str(path), job_id)
         return _envelope(True, "ETL job submitted", {"jobId": job_id, "status": "running"})
@@ -209,57 +208,3 @@ def _jsonable(v: Any) -> Any:
     if hasattr(v, "as_integer_ratio") and not isinstance(v, (int, float)):
         return float(v)  # Decimal
     return v
-
-
-def build_fastapi_app(api: ClinicalAPI):
-    """Optional real HTTP wiring (same routes as the reference). fastapi is
-    not a dependency of this engine; callers that have it get actual
-    endpoints, everyone else uses the facade directly."""
-    try:
-        from fastapi import FastAPI
-    except ImportError as e:  # pragma: no cover
-        raise ImportError("fastapi not installed; use ClinicalAPI directly") from e
-
-    app = FastAPI(title="clinical-api-etl-spark")
-
-    @app.get("/health")
-    def health():
-        return api.health()
-
-    @app.post("/api/etl/jobs")
-    def submit(body: dict):
-        return api.submit_job(body.get("filename"))
-
-    @app.get("/api/etl/jobs/{job_id}")
-    def job(job_id: str):
-        return api.get_job(job_id)
-
-    @app.get("/api/etl/jobs/{job_id}/status")
-    def status(job_id: str):
-        return api.get_job_status(job_id)
-
-    @app.get("/api/data")
-    def data(
-        studyId: str | None = None,
-        participantId: str | None = None,
-        measurementType: str | None = None,
-        startDate: str | None = None,
-        endDate: str | None = None,
-    ):
-        return api.get_data(
-            study_id=studyId,
-            participant_id=participantId,
-            measurement_type=measurementType,
-            start_date=startDate,
-            end_date=endDate,
-        )
-
-    @app.get("/api/data/studies/{study_id}")
-    def study(study_id: str):
-        return api.get_study_data(study_id)
-
-    @app.post("/__test__/reset")
-    def reset():
-        return api.reset()
-
-    return app

@@ -59,9 +59,13 @@ def process_job(
     job_id: str | None = None,
     data_root: str | None = None,
 ) -> str:
-    """Run the full pipeline for one CSV; returns the job id."""
+    """Run the full pipeline for one CSV; returns the job id. The ledger
+    row is created here only when none exists for ``job_id`` (the API
+    creates its uploads' rows before calling this)."""
     ledger = JobLedger(warehouse)
-    jid = ledger.submit(os.path.basename(csv_path), job_id=job_id)
+    jid = job_id
+    if jid is None or ledger.fetch(jid) is None:
+        jid = ledger.submit(os.path.basename(csv_path), job_id=jid)
     try:
         ledger.mark(jid, "running", "reading csv", progress=10)
         raw = read_clinical_csv(spark, csv_path, root=data_root)

@@ -20,13 +20,16 @@ store.
 
 Merges are **partition-scoped** where the layout allows it: when the merge
 key contains the table's partition column, only the partition directories
-present in the incoming batch are rewritten (write touched partitions to a
-temp dir, swap each ``col=value`` directory in, leave every other
-partition's files untouched). A job that merges one study's aggregates
-rewrites one study's directory — O(batch), not O(history) — which is the
-property that survives 100 TB. Tables whose key doesn't cover the
-partition column fall back to a whole-table rewrite via temp dir + rename
-swap (parquet cannot be overwritten in place while being read). On a real
+present in the incoming batch are read back, merged and committed, through
+Spark's dynamic partition overwrite (the write is staged inside the table
+and job commit replaces exactly the partitions it wrote; every other
+partition's files stay untouched). A job that merges one study's
+aggregates rewrites one study's directory — O(batch), not O(history).
+Tables whose key doesn't cover the partition column fall back to a
+whole-table rewrite via temp dir + rename swap (parquet cannot be
+overwritten in place while being read). All three merges (``upsert``,
+``merge_aggregations``, ``scd2_merge``) run one skeleton, ``_merge``, and
+differ only in how they combine existing and incoming rows. On a real
 deployment this module is the one swap-out point: Delta/Iceberg ``MERGE``
 gives the same semantics transactionally with snapshot isolation; the
 operator layer above is unchanged. The anti-join itself broadcasts the
@@ -47,6 +50,7 @@ import shutil
 import threading
 import time
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 from pathlib import Path
 
@@ -117,7 +121,7 @@ class ParquetWarehouse:
           process exits (no stale-lock file to time out).
 
         The flock is acquired once at depth 0 and held across nested
-        writer calls (``upsert`` → ``_swap_partitions``): flock is NOT
+        writer calls (``_merge`` → ``_swap_partitions``): flock is NOT
         reentrant across file descriptors, so depth is tracked under
         the RLock. ``SnapshotWarehouse`` additionally backstops every
         manifest publish with an optimistic hard-link claim, defending
@@ -200,9 +204,10 @@ class ParquetWarehouse:
         """Read a table, tolerating a concurrent merge's directory swap.
 
         The warehouse is single-writer / many-reader; ``_rewrite`` swaps
-        the table directory, so a reader can momentarily see a vanishing
-        file listing *or a vanished directory* (e.g. a status poller
-        during a background job's ledger update). Both the exception path
+        the table directory and a partition merge replaces partition
+        directories, so a reader can momentarily see a vanishing file
+        listing *or a vanished directory* (e.g. a data query during a
+        background job's merge). Both the exception path
         and the absent-directory path retry; ``None`` is returned only
         when absence persists with no swap in flight. The Delta/Iceberg
         swap-out removes this entirely via snapshot isolation.
@@ -303,53 +308,63 @@ class ParquetWarehouse:
         return cond
 
     def _swap_partitions(self, table: str, merged: DataFrame, pcol: str) -> None:
-        """Materialize ``merged`` (touched partitions only) to a temp dir,
-        then swap each written ``pcol=value`` directory into the live
-        table. Untouched partition directories are never opened, rewritten
-        or renamed — their files stay byte-identical."""
-        tmp = self.root / f"{table}.tmp-{uuid.uuid4().hex}"
-        merged.write.mode("overwrite").partitionBy(pcol).parquet(str(tmp))
-        final = self._path(table)
-        final.mkdir(parents=True, exist_ok=True)
-        old = self.root / f"{table}.old-{uuid.uuid4().hex}"
-        old.mkdir()
-        # Spark already hive-escaped the directory names in tmp — swap by
-        # name, no value→path encoding of our own.
-        for src in sorted(tmp.iterdir()):
-            if not src.is_dir() or not src.name.startswith(f"{pcol}="):
-                continue
-            dst = final / src.name
-            if dst.exists():
-                dst.rename(old / src.name)
-            src.rename(dst)
-        shutil.rmtree(old)
-        shutil.rmtree(tmp)
+        """Commit ``merged`` (touched partitions only) into the live table
+        with Spark's dynamic partition overwrite: the write is staged under
+        ``<table>/.spark-staging-*`` and job commit replaces exactly the
+        ``pcol=value`` partitions it wrote. Every touched partition holds
+        at least one incoming row of ``merged``, so the partitions replaced
+        are exactly the touched ones; untouched partition directories are
+        never opened, rewritten or renamed, and their files stay
+        byte-identical. A failed write aborts the job and removes its
+        staging directory, leaving the table as it was."""
+        (
+            merged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(pcol)
+            .parquet(str(self._path(table)))
+        )
 
-    def upsert(self, table: str, df: DataFrame, key: list[str]) -> None:
-        """S9/J2: last-write-wins merge on the key (new rows replace old).
-
-        Partition-scoped when the key covers the partition column: only
-        partitions present in ``df`` are read back, merged and swapped.
-        The job ledger's rows (keyed by id) go to its own store.
-        """
-        ledger = self._job_ledger(table)
-        if ledger is not None:
-            ledger.put(df.collect())
-            return
+    def _merge(
+        self,
+        table: str,
+        df: DataFrame,
+        key: list[str],
+        combine: Callable[[DataFrame, DataFrame], DataFrame],
+    ) -> None:
+        """The one merge skeleton: read the table, scope the read to the
+        partitions ``df`` touches, ``combine(existing, df)`` into the new
+        rows of those partitions, and commit them. An absent table is
+        written whole from ``df``; a key that does not cover the partition
+        column merges and rewrites the whole table."""
         with self._commit_guard():
             existing = self.read(table)
             if existing is None:
                 self._rewrite(table, df)
                 return
             pcol = self._scoped_pcol(table, key)
-            if pcol is not None:
-                existing = existing.filter(self._touched_filter(pcol, df))
+            if pcol is None:
+                self._rewrite(table, combine(existing, df))
+                return
+            existing = existing.filter(self._touched_filter(pcol, df))
+            self._swap_partitions(table, combine(existing, df), pcol)
+
+    def upsert(self, table: str, df: DataFrame, key: list[str]) -> None:
+        """S9/J2: last-write-wins merge on the key (new rows replace old).
+
+        Partition-scoped when the key covers the partition column: only
+        partitions present in ``df`` are read back, merged and replaced.
+        The job ledger's rows (keyed by id) go to its own store.
+        """
+        ledger = self._job_ledger(table)
+        if ledger is not None:
+            ledger.put(df.collect())
+            return
+
+        def combine(existing: DataFrame, df: DataFrame) -> DataFrame:
             keep = existing.join(df.select(*key), on=key, how="left_anti")
-            merged = keep.unionByName(df, allowMissingColumns=True)
-            if pcol is not None:
-                self._swap_partitions(table, merged, pcol)
-            else:
-                self._rewrite(table, merged)
+            return keep.unionByName(df, allowMissingColumns=True)
+
+        self._merge(table, df, key, combine)
 
     def merge_aggregations(self, table: str, df: DataFrame, key: list[str]) -> None:
         """S8: the reference's asymmetric agg upsert (db.py:120-126):
@@ -362,47 +377,36 @@ class ParquetWarehouse:
         Partition-scoped like :meth:`upsert`: a job merging one study's
         aggregates rewrites only that study's partition directory.
         """
-        with self._commit_guard():
-            self._merge_aggregations(table, df, key)
 
-    def _merge_aggregations(self, table: str, df: DataFrame, key: list[str]) -> None:
-        existing = self.read(table)
-        if existing is None:
-            self._rewrite(table, df)
-            return
-        pcol = self._scoped_pcol(table, key)
-        if pcol is not None:
-            existing = existing.filter(self._touched_filter(pcol, df))
-        new = df.select(
-            *key,
-            F.col("cnt").alias("_new_cnt"),
-            F.col("avg_num").alias("_new_avg"),
-            F.col("min_num").alias("_new_min"),
-            F.col("max_num").alias("_new_max"),
-            F.col("job_id").alias("_new_job"),
-        )
-        merged = existing.join(new, on=key, how="full_outer").select(
-            *key,
-            F.coalesce("_new_cnt", "cnt").alias("cnt"),
-            F.coalesce("_new_avg", "avg_num").alias("avg_num"),
-            F.when(
-                F.col("_new_min").isNotNull(),
-                F.least(F.coalesce("min_num", "_new_min"), F.col("_new_min")),
+        def combine(existing: DataFrame, df: DataFrame) -> DataFrame:
+            new = df.select(
+                *key,
+                F.col("cnt").alias("_new_cnt"),
+                F.col("avg_num").alias("_new_avg"),
+                F.col("min_num").alias("_new_min"),
+                F.col("max_num").alias("_new_max"),
+                F.col("job_id").alias("_new_job"),
             )
-            .otherwise(F.col("min_num"))
-            .alias("min_num"),
-            F.when(
-                F.col("_new_max").isNotNull(),
-                F.greatest(F.coalesce("max_num", "_new_max"), F.col("_new_max")),
+            return existing.join(new, on=key, how="full_outer").select(
+                *key,
+                F.coalesce("_new_cnt", "cnt").alias("cnt"),
+                F.coalesce("_new_avg", "avg_num").alias("avg_num"),
+                F.when(
+                    F.col("_new_min").isNotNull(),
+                    F.least(F.coalesce("min_num", "_new_min"), F.col("_new_min")),
+                )
+                .otherwise(F.col("min_num"))
+                .alias("min_num"),
+                F.when(
+                    F.col("_new_max").isNotNull(),
+                    F.greatest(F.coalesce("max_num", "_new_max"), F.col("_new_max")),
+                )
+                .otherwise(F.col("max_num"))
+                .alias("max_num"),
+                F.coalesce("_new_job", "job_id").alias("job_id"),
             )
-            .otherwise(F.col("max_num"))
-            .alias("max_num"),
-            F.coalesce("_new_job", "job_id").alias("job_id"),
-        )
-        if pcol is not None:
-            self._swap_partitions(table, merged, pcol)
-        else:
-            self._rewrite(table, merged)
+
+        self._merge(table, df, key, combine)
 
     def scd2_merge(
         self,
@@ -426,33 +430,26 @@ class ParquetWarehouse:
         Scale posture: one window over the batch (small), one join of the
         EXISTING table against the batch's distinct keys (broadcast — a
         batch touches few keys relative to history), then the same
-        partition-scoped or whole-table swap as every other merge. As-of
+        :meth:`_merge` commit as every other merge. As-of
         reads are then plain range predicates (``valid_from <= t <
         coalesce(valid_to, inf)``) — the ``operators/temporal.asof_join``
         companion shape.
         """
         from pyspark.sql.window import Window as W
 
-        with self._commit_guard():
-            w = W.partitionBy(*key).orderBy(ts_col)
-            incoming = (
-                df.withColumn("valid_from", F.col(ts_col))
-                .withColumn("valid_to", F.lead("valid_from").over(w))
-                .withColumn("is_current", F.col("valid_to").isNull())
-                .drop(ts_col)
-            )
-            existing = self.read(table)
-            if existing is None:
-                self._rewrite(table, incoming)
-                return
-            pcol = self._scoped_pcol(table, key)
-            if pcol is not None:
-                existing = existing.filter(self._touched_filter(pcol, df))
-            first_new = (
-                df.groupBy(*key).agg(F.min(ts_col).alias("_new_from"))
-            )
+        w = W.partitionBy(*key).orderBy(ts_col)
+        incoming = (
+            df.withColumn("valid_from", F.col(ts_col))
+            .withColumn("valid_to", F.lead("valid_from").over(w))
+            .withColumn("is_current", F.col("valid_to").isNull())
+            .drop(ts_col)
+        )
+        first_new = incoming.groupBy(*key).agg(F.min("valid_from").alias("_new_from"))
+        first_new = F.broadcast(first_new)
+
+        def combine(existing: DataFrame, incoming: DataFrame) -> DataFrame:
             closed = (
-                existing.join(F.broadcast(first_new), on=key, how="left")
+                existing.join(first_new, on=key, how="left")
                 .withColumn(
                     "valid_to",
                     F.when(
@@ -466,8 +463,6 @@ class ParquetWarehouse:
                 )
                 .drop("_new_from")
             )
-            merged = closed.unionByName(incoming, allowMissingColumns=True)
-            if pcol is not None:
-                self._swap_partitions(table, merged, pcol)
-            else:
-                self._rewrite(table, merged)
+            return closed.unionByName(incoming, allowMissingColumns=True)
+
+        self._merge(table, incoming, key, combine)

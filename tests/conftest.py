@@ -18,6 +18,8 @@ def spark():
 
 @pytest.fixture()
 def warehouse(spark, tmp_path):
-    from clinical_api_etl_spark.sources.sinks import ParquetWarehouse
+    """The service's warehouse: the blueprint partition layout, so merges
+    run partition-scoped as they do in the service."""
+    from clinical_api_etl_spark.sources.sinks import clinical_warehouse
 
-    return ParquetWarehouse(spark, str(tmp_path / "wh"))
+    return clinical_warehouse(spark, str(tmp_path / "wh"))

@@ -155,3 +155,29 @@ def test_background_submit_polls_to_completion(spark, warehouse, tmp_path):
         _time.sleep(1)
     assert status == "completed"
     assert len(api.get_data()["data"]) == 3
+
+
+def test_background_upload_writes_its_ledger_row_once(spark, warehouse, tmp_path):
+    """A background upload's ledger row is created once, by the API: the
+    runner neither re-stamps ``created_at`` nor renames the client's
+    filename to its basename."""
+    import time as _time
+
+    data = tmp_path / "bgdata"
+    (data / "sub").mkdir(parents=True)
+    (data / "sub" / "study.csv").write_text("\n".join([HEADER, *ROWS]) + "\n")
+    api = ClinicalAPI(spark, warehouse, str(data), background=True)
+
+    jid = api.submit_job("sub/study.csv")["data"]["jobId"]
+    created_at = api.get_job(jid)["data"]["created_at"]
+
+    job = None
+    deadline = _time.time() + 120
+    while _time.time() < deadline:
+        job = api.get_job(jid)["data"]
+        if job["status"] in ("completed", "failed"):
+            break
+        _time.sleep(0.5)
+    assert job["status"] == "completed"
+    assert job["filename"] == "sub/study.csv"
+    assert job["created_at"] == created_at

@@ -72,6 +72,7 @@ class TestPartitionScopedUpsert:
             for p in Path(pwh.root).iterdir()
             if ".tmp-" in p.name or ".old-" in p.name
         ]
+        leftovers += [p.name for p in (Path(pwh.root) / "gold").glob(".spark-staging-*")]
         assert leftovers == []
 
     def test_unpartitioned_fallback_unchanged(self, spark, pwh):
