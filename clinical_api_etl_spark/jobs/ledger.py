@@ -19,8 +19,8 @@ statements, and no Spark job. The warehouse still answers
 :meth:`JobLedger.put`, so views and bulk loaders see the same table; this
 module is the only one that knows the storage format.
 
-Progress maps to the reference's fixed checkpoints (etl.py:236-263) and,
-for streaming jobs, to ``StreamingQuery.lastProgress``.
+Progress maps to the reference's fixed checkpoints (etl.py:236-263), stream
+batches too (``run_pipeline``'s 30/65/75/90); nothing reads ``lastProgress``.
 """
 
 from __future__ import annotations

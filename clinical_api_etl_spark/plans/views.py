@@ -20,61 +20,54 @@ from clinical_api_etl_spark.jobs.runner import BRONZE_TABLE, SILVER_TABLE
 from clinical_api_etl_spark.sources.sinks import ParquetWarehouse
 
 
-def register_views(wh: ParquetWarehouse) -> None:
-    """Register warehouse tables + the six views (08_views.sql)."""
-    for table in (
-        BRONZE_TABLE,
-        SILVER_TABLE,
-        "studies",
-        "participants",
-        "data_quality_reports",
-        "measurement_aggregations",
-        "etl_jobs",
-    ):
-        df = wh.read(table)
-        if df is not None:
-            df.createOrReplaceTempView(table)
+#: The warehouse tables registered as temp views under their own names.
+TABLES = (BRONZE_TABLE, SILVER_TABLE, "studies", "participants", "data_quality_reports",
+          "measurement_aggregations", "etl_jobs")
 
-    spark = wh.spark
-    # v_study_quality (08_views.sql:1-4)
-    spark.sql(
-        f"""CREATE OR REPLACE TEMP VIEW v_study_quality AS
-        SELECT study_id, AVG(quality_score) AS avg_quality
-        FROM {SILVER_TABLE} GROUP BY study_id"""
-    )
-    # v_glucose_trend (08_views.sql:6-10)
-    spark.sql(
-        f"""CREATE OR REPLACE TEMP VIEW v_glucose_trend AS
-        SELECT study_id, participant_id, DATE(measured_at) AS day,
-               AVG(value_num) AS avg_glucose
-        FROM {SILVER_TABLE}
+#: The six views (08_views.sql): name -> (the table it reads, its query).
+VIEWS = {
+    # 08_views.sql:1-4
+    "v_study_quality": (SILVER_TABLE, f"""SELECT study_id,
+        AVG(quality_score) AS avg_quality FROM {SILVER_TABLE} GROUP BY study_id"""),
+    # 08_views.sql:6-10
+    "v_glucose_trend": (SILVER_TABLE, f"""SELECT study_id, participant_id,
+        DATE(measured_at) AS day, AVG(value_num) AS avg_glucose FROM {SILVER_TABLE}
         WHERE measurement_type = 'glucose' AND value_num IS NOT NULL
-        GROUP BY study_id, participant_id, DATE(measured_at)"""
-    )
-    # v_counts_by_site (08_views.sql:12-15)
-    spark.sql(
-        f"""CREATE OR REPLACE TEMP VIEW v_counts_by_site AS
-        SELECT study_id, site_id, measurement_type, COUNT(*) AS cnt
-        FROM {SILVER_TABLE} GROUP BY study_id, site_id, measurement_type"""
-    )
-    # v_low_quality (08_views.sql:17-20) — P7 partial predicate
-    spark.sql(
-        f"""CREATE OR REPLACE TEMP VIEW v_low_quality AS
-        SELECT * FROM {SILVER_TABLE}
-        WHERE quality_score IS NOT NULL AND quality_score < 0.95"""
-    )
-    # v_recent_30d (08_views.sql:22-25) — F9 interval arithmetic
-    spark.sql(
-        f"""CREATE OR REPLACE TEMP VIEW v_recent_30d AS
-        SELECT * FROM {SILVER_TABLE}
-        WHERE measured_at >= current_timestamp() - INTERVAL 30 DAYS"""
-    )
-    # v_participants_per_study (08_views.sql:27-30)
-    spark.sql(
-        """CREATE OR REPLACE TEMP VIEW v_participants_per_study AS
-        SELECT study_id, COUNT(*) AS participants
-        FROM participants GROUP BY study_id"""
-    )
+        GROUP BY study_id, participant_id, DATE(measured_at)"""),
+    # 08_views.sql:12-15
+    "v_counts_by_site": (SILVER_TABLE, f"""SELECT study_id, site_id, measurement_type,
+        COUNT(*) AS cnt FROM {SILVER_TABLE} GROUP BY study_id, site_id, measurement_type"""),
+    # 08_views.sql:17-20 — P7 partial predicate
+    "v_low_quality": (SILVER_TABLE, f"""SELECT * FROM {SILVER_TABLE}
+        WHERE quality_score IS NOT NULL AND quality_score < 0.95"""),
+    # 08_views.sql:22-25 — F9 interval arithmetic
+    "v_recent_30d": (SILVER_TABLE, f"""SELECT * FROM {SILVER_TABLE}
+        WHERE measured_at >= current_timestamp() - INTERVAL 30 DAYS"""),
+    # 08_views.sql:27-30
+    "v_participants_per_study": ("participants", """SELECT study_id,
+        COUNT(*) AS participants FROM participants GROUP BY study_id"""),
+}
+
+
+def register_views(wh: ParquetWarehouse) -> None:
+    """Register warehouse tables + the six views (08_views.sql).
+
+    An absent table gets no temp view, nor does a view over it, and an
+    earlier call's registration of either is dropped: an empty or
+    stream-only warehouse registers what it holds, and after ``reset`` no
+    view still points at deleted files."""
+    spark = wh.spark
+    frames = {table: wh.read(table) for table in TABLES}
+    for table, df in frames.items():
+        if df is None:
+            spark.catalog.dropTempView(table)
+        else:
+            df.createOrReplaceTempView(table)
+    for name, (table, query) in VIEWS.items():
+        if frames[table] is not None:
+            spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS {query}")
+        else:
+            spark.catalog.dropTempView(name)
 
 
 def query_measurements(

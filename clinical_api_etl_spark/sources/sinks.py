@@ -272,12 +272,17 @@ class ParquetWarehouse:
         """Whole-table rewrite: materialize to temp (live table still
         readable), then swap via two renames. The table directory is
         absent only between the renames — microseconds, not the rmtree
-        duration — and ``read`` retries across it."""
+        duration — and ``read`` retries across it. A failed write removes
+        its temp dir, which would otherwise make ``read`` wait on a swap."""
         tmp = self.root / f"{table}.tmp-{uuid.uuid4().hex}"
         w = df.write.mode("overwrite")
         if table in self.partitioning:
             w = w.partitionBy(*self.partitioning[table])
-        w.parquet(str(tmp))
+        try:
+            w.parquet(str(tmp))
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
         final = self._path(table)
         old = self.root / f"{table}.old-{uuid.uuid4().hex}"
         if final.exists():

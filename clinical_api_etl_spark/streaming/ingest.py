@@ -35,6 +35,7 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from clinical_api_etl_spark.jobs.runner import run_pipeline
 
@@ -68,7 +69,7 @@ def run_ingest_stream(
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
     processing_time: str = "10 seconds",
-) -> None:
+) -> StreamingQuery:
     """Start (and, for availableNow, await) the drop-folder ingestion stream.
 
     ``available_now=False`` runs continuously with a ``processing_time``

@@ -137,26 +137,21 @@ class TestErrors:
 
 class TestFederated:
     def test_union_parquet_orc_jsonl_avro(self, spark, tmp_path):
-        """Round-6 federated-source test, extended to FIVE physical
-        formats (parquet/ORC/JSONL/Avro OCF/XML) serving one logical
-        table, unioned and compared row-exact."""
+        """Round-6 federated-source test: FOUR physical formats
+        (parquet/ORC/JSONL/Avro OCF) serving one logical table, unioned
+        and compared row-exact."""
         from clinical_api_etl_spark.sources.formats import write_orc
-        from clinical_api_etl_spark.sources.xmlds import XmlTableDataSource
 
-        spark.dataSource.register(XmlTableDataSource)
         nation = load(spark, SF, "nation")
         q1 = nation.filter(F.col("n_nationkey") % 6 == 0)
         q2 = nation.filter(F.col("n_nationkey") % 6 == 1)
         q3 = nation.filter(F.col("n_nationkey") % 6 == 2)
-        q4 = nation.filter(F.col("n_nationkey") % 6 == 3)
-        q5 = nation.filter(F.col("n_nationkey") % 6 >= 4)
+        q4 = nation.filter(F.col("n_nationkey") % 6 >= 3)
 
         pq = str(tmp_path / "pq"); q1.write.parquet(pq)
         orc = str(tmp_path / "orc"); write_orc(q2, orc)
         jl = str(tmp_path / "jl"); q3.write.json(jl)
         av = str(tmp_path / "av"); write_avro(q4, av)
-        xm = str(tmp_path / "xm")
-        q5.write.format("xmltable").option("path", xm).mode("append").save()
 
         fed = (
             spark.read.parquet(pq)
@@ -165,12 +160,6 @@ class TestFederated:
                 spark.read.schema(nation.schema).json(jl).select(nation.columns)
             )
             .unionByName(read_avro(spark, av))
-            .unionByName(
-                spark.read.format("xmltable")
-                .schema(nation.schema)
-                .option("path", xm)
-                .load()
-            )
         )
         assert _sorted_rows(fed) == _sorted_rows(nation)
 

@@ -109,9 +109,12 @@ def test_polls_during_marks_never_miss_or_regress(warehouse):
     def poller(out: list[int | None]) -> None:
         try:
             while True:
+                # Read the flag before the fetch: the last poll then starts
+                # after the writer's last mark and must see 200.
+                finished = done.is_set()
                 row = JobLedger(warehouse).fetch(jid)
                 out.append(None if row is None else row.progress)
-                if done.is_set():
+                if finished:
                     return
         except Exception as e:  # noqa: BLE001 — reported below
             errors.append(e)

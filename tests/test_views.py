@@ -5,8 +5,9 @@ from __future__ import annotations
 
 import pytest
 
-from clinical_api_etl_spark.jobs.runner import process_job
-from clinical_api_etl_spark.plans.views import register_views
+from clinical_api_etl_spark.jobs.runner import SILVER_TABLE, process_job
+from clinical_api_etl_spark.plans.views import TABLES, VIEWS, register_views
+from clinical_api_etl_spark.streaming.ingest import run_ingest_stream
 
 HEADER = "study_id,participant_id,measurement_type,value,unit,timestamp,site_id,quality_score"
 ROWS = [
@@ -76,3 +77,45 @@ def test_v_participants_per_study(views):
     got = {r["study_id"]: r["participants"] for r in views.sql(
         "SELECT * FROM v_participants_per_study").collect()}
     assert got == {"S1": 2, "S2": 2}
+
+
+def _registered(spark):
+    """The warehouse tables and views currently registered as temp views."""
+    names = set(TABLES) | set(VIEWS)
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary} & names
+
+
+def test_empty_warehouse_registers_nothing(spark, warehouse):
+    register_views(warehouse)
+    assert _registered(spark) == set()
+
+
+def test_stream_only_warehouse_registers_the_silver_views(spark, warehouse, tmp_path):
+    """The stream writes no ``participants``: the five silver views serve
+    its rows and the participants view is not registered."""
+    from datetime import datetime, timedelta, timezone
+
+    recent = (datetime.now(timezone.utc) - timedelta(days=1)).strftime("%Y-%m-%dT%H:%M:%SZ")
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    (drop / "f1.csv").write_text("\n".join([
+        HEADER,
+        f"S1,P1,glucose,100,mg/dL,{recent},SITE_A,0.90",
+        "S1,P2,heart_rate,70,bpm,2024-01-10T09:00:00Z,SITE_B,0.99",
+    ]) + "\n")
+    run_ingest_stream(spark, warehouse, str(drop), str(tmp_path / "ckpt"))
+    assert warehouse.read("participants") is None
+
+    register_views(warehouse)
+    for name, (table, _) in VIEWS.items():
+        if table == SILVER_TABLE:
+            assert spark.sql(f"SELECT * FROM {name}").count() > 0, name
+    assert "v_participants_per_study" not in _registered(spark)
+    assert "participants" not in _registered(spark)
+
+
+def test_reset_drops_every_earlier_registration(spark, views, warehouse):
+    assert {"v_study_quality", "v_participants_per_study", SILVER_TABLE} <= _registered(spark)
+    warehouse.reset()
+    register_views(warehouse)
+    assert _registered(spark) == set()
