@@ -19,8 +19,11 @@ statements, and no Spark job. The warehouse still answers
 :meth:`JobLedger.put`, so views and bulk loaders see the same table; this
 module is the only one that knows the storage format.
 
-Progress maps to the reference's fixed checkpoints (etl.py:236-263), stream
-batches too (``run_pipeline``'s 30/65/75/90); nothing reads ``lastProgress``.
+Progress follows the reference's checkpoints (etl.py:236-263), for stream
+batches too: ``run_pipeline`` marks 30 before the bronze append and 45
+before its concurrent writes, then rises to 90 as each write ends, and only
+its calling thread marks, so progress never falls; nothing reads
+``lastProgress``.
 """
 
 from __future__ import annotations

@@ -36,10 +36,16 @@ operator layer above is unchanged. The anti-join itself broadcasts the
 *incoming* batch (a single job's rows — small) against the big existing
 table, so no shuffle of the warehouse side.
 
-Concurrency posture: single-writer / many-reader. A per-warehouse lock
-serializes writers in-process (the reference gets this from Postgres
-transactions; background API jobs run one at a time). Readers ride out a
-swap's brief directory-absence window via ``read``'s bounded retry.
+Tables with a declared schema (``schemas``; the six clinical tables in
+:data:`CLINICAL_SCHEMAS`) are read with it, which lists files but starts
+no Spark job, and every write to one is checked against it first. Other
+tables are read with ``mergeSchema``.
+
+Concurrency posture: one writer per table, many readers. Writers on
+different tables run at once, writers on one table serialize, and
+``reset`` excludes every writer (``_commit_guard``; the reference gets
+this from Postgres transactions). Readers ride out a swap's brief
+directory-absence window via ``read``'s bounded retry.
 """
 
 from __future__ import annotations
@@ -56,6 +62,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 #: The SURVEY §4/§7 blueprint layout: bronze partitioned by ingestion job
 #: (per-job pruning for re-ingest anti-joins and the data API's job reads),
@@ -69,10 +76,34 @@ CLINICAL_PARTITIONING = {
     "participants": ["study_id"],
 }
 
+#: The clinical tables' read schemas, as a ``mergeSchema`` read returns
+#: them: data columns in file order, then the partition column.
+CLINICAL_SCHEMAS = {
+    "staging_clinical_measurements": (
+        "id string, source_filename string, row_num int, study_id string, "
+        "participant_id string, measurement_type string, value string, unit string, "
+        "timestamp timestamp, site_id string, quality_score double, job_id string"
+    ),
+    "processed_measurements": (
+        "participant_id string, site_id string, measurement_type string, "
+        "measured_at timestamp, value_num decimal(14,4), value_text string, unit string, "
+        "quality_score double, raw_row_id string, job_id string, study_id string"
+    ),
+    "measurement_aggregations": (
+        "participant_id string, site_id string, measurement_type string, cnt bigint, "
+        "avg_num double, min_num double, max_num double, job_id string, study_id string"
+    ),
+    "participants": "participant_id string, site_id string, study_id string",
+    "studies": "study_id string",
+    "data_quality_reports": "job_id string, rule_name string, severity string, affected_rows bigint",
+}
+
 
 def clinical_warehouse(spark: SparkSession, root: str) -> "ParquetWarehouse":
-    """Warehouse with the blueprint partition layout."""
-    return ParquetWarehouse(spark, root, partitioning=CLINICAL_PARTITIONING)
+    """Warehouse with the blueprint partition layout and declared schemas."""
+    return ParquetWarehouse(
+        spark, root, partitioning=CLINICAL_PARTITIONING, schemas=CLINICAL_SCHEMAS
+    )
 
 
 class ParquetWarehouse:
@@ -84,6 +115,11 @@ class ParquetWarehouse:
     reference's leading-index-column design (study/job-keyed indexes,
     02_staging_clinical_trials.sql:26-34) — and per-partition appends
     instead of whole-directory growth.
+
+    ``schemas`` maps table name → declared read schema (a DDL string).
+    A declared table is read with that schema instead of merging its
+    files' footers, and a write whose columns or types differ from it
+    raises ``ValueError`` before any Spark job.
     """
 
     def __init__(
@@ -92,38 +128,58 @@ class ParquetWarehouse:
         root: str,
         *,
         partitioning: dict[str, list[str]] | None = None,
+        schemas: dict[str, str] | None = None,
     ) -> None:
         self.spark = spark
         self.root = Path(root)
         self.root.mkdir(parents=True, exist_ok=True)
         self.partitioning = dict(partitioning or {})
-        #: Serializes writers (background API jobs, concurrent tests) —
-        #: the in-process analogue of the reference's Postgres
-        #: transactions. RLock: append_if_absent calls append.
-        self._write_lock = threading.RLock()
-        #: Cross-process writer exclusion (see :meth:`_commit_guard`).
-        self._flock_depth = 0
-        self._flock_fd: int | None = None
+        self.schemas = {t: T.StructType.fromDDL(ddl) for t, ddl in (schemas or {}).items()}
+        #: Per thread: the guards it holds (a table, or ``None`` for the
+        #: whole warehouse) → nesting depth (see :meth:`_commit_guard`).
+        self._guards = threading.local()
+
+    def _flock(self, name: str, op: int) -> int:
+        """A new descriptor on ``<root>/<name>``, flock'ed with ``op``."""
+        fd = os.open(str(self.root / name), os.O_CREAT | os.O_RDWR, 0o644)
+        try:
+            fcntl.flock(fd, op)
+        except BaseException:
+            os.close(fd)
+            raise
+        return fd
 
     @contextmanager
-    def _commit_guard(self):
-        """Writer critical section, safe across THREADS and PROCESSES.
+    def _commit_guard(self, table: str | None = None):
+        """Writer critical section for ``table`` (``None``: the whole
+        warehouse), safe across THREADS and PROCESSES.
 
         The reference gets concurrent-upsert safety from Postgres row
         locks + ``ON CONFLICT`` (etl-service/src/db.py:41-58); plain
-        parquet directories have no such arbiter, so two *processes*
-        (two Spark drivers, a backfill next to the API) merging one
-        table would race on the directory swap. This guard composes:
+        parquet directories have no such arbiter, so two writers (two
+        threads of one job, two Spark applications, a backfill next to the
+        API) merging one table would race on the directory swap. A
+        writer of ``table`` holds two ``fcntl.flock`` locks, kernel-
+        mediated and released automatically when the holding process
+        exits (no stale-lock file to time out):
 
-        * the in-process ``RLock`` (thread exclusion, reentrancy), and
-        * an exclusive ``fcntl.flock`` on ``<root>/.writer.lock`` —
-          kernel-mediated, released automatically when the holding
-          process exits (no stale-lock file to time out).
+        * ``<root>/.writer.lock`` shared, so writers of different tables
+          run at once, and
+        * ``<root>/.writer.lock.<table>`` exclusive, so writers of one
+          table serialize.
 
-        The flock is acquired once at depth 0 and held across nested
-        writer calls (``_merge`` → ``_swap_partitions``): flock is NOT
-        reentrant across file descriptors, so depth is tracked under
-        the RLock. ``SnapshotWarehouse`` additionally backstops every
+        ``reset`` and other calls without a table hold ``.writer.lock``
+        exclusive: they wait for every writer, and every writer waits
+        for them. Each acquisition opens its own descriptors, and flock
+        excludes separate descriptors within one process as it does
+        across processes, so threads and processes are excluded alike.
+
+        Nested calls (``_merge`` → ``_swap_partitions``) reuse the held
+        locks: flock is NOT reentrant across descriptors, so depth is
+        tracked per thread and table. A nested call must therefore pass
+        the table its caller holds; a whole-warehouse call cannot nest
+        inside a table's (that would wait on its own shared lock), and
+        raises instead. ``SnapshotWarehouse`` additionally backstops every
         manifest publish with an optimistic hard-link claim, defending
         even against writers that bypass this guard.
 
@@ -139,27 +195,36 @@ class ParquetWarehouse:
         swaps carry no such backstop: keep multi-host writers on the
         SnapshotWarehouse path.
         """
-        with self._write_lock:
-            if self._flock_depth == 0:
-                self.root.mkdir(parents=True, exist_ok=True)
-                fd = os.open(str(self.root / ".writer.lock"), os.O_CREAT | os.O_RDWR, 0o644)
-                try:
-                    fcntl.flock(fd, fcntl.LOCK_EX)
-                except Exception:
-                    os.close(fd)
-                    raise
-                self._flock_fd = fd
-            self._flock_depth += 1
+        held = getattr(self._guards, "held", None)
+        if held is None:
+            held = self._guards.held = {}
+        key = None if None in held else table
+        if key in held:  # nested: the whole warehouse or this table is held
+            held[key] += 1
             try:
                 yield
             finally:
-                self._flock_depth -= 1
-                if self._flock_depth == 0 and self._flock_fd is not None:
-                    try:
-                        fcntl.flock(self._flock_fd, fcntl.LOCK_UN)
-                    finally:
-                        os.close(self._flock_fd)
-                        self._flock_fd = None
+                held[key] -= 1
+            return
+        if table is None and held:
+            raise RuntimeError(f"whole-warehouse guard inside the guard of {sorted(held)}")
+        self.root.mkdir(parents=True, exist_ok=True)
+        fds: list[int] = []
+        try:
+            if table is None:
+                fds.append(self._flock(".writer.lock", fcntl.LOCK_EX))
+            else:
+                fds.append(self._flock(".writer.lock", fcntl.LOCK_SH))
+                fds.append(self._flock(f".writer.lock.{table}", fcntl.LOCK_EX))
+            held[table] = 1
+            yield
+        finally:
+            held.pop(table, None)
+            for fd in reversed(fds):
+                try:
+                    fcntl.flock(fd, fcntl.LOCK_UN)
+                finally:
+                    os.close(fd)
 
     def _path(self, table: str) -> Path:
         return self.root / table
@@ -170,11 +235,11 @@ class ParquetWarehouse:
         since its reset.sql is absent from the repo; corrected semantics
         implemented here)."""
         with self._commit_guard():
-            # Children only — unlinking .writer.lock while a process holds
-            # (or is blocked on) its inode would let a later opener acquire
-            # a NEW inode's lock concurrently (classic unlink-lockfile race).
+            # Children only — unlinking a .writer.lock* file while a process
+            # holds (or is blocked on) its inode would let a later opener
+            # acquire a NEW inode's lock concurrently (the unlink-lockfile race).
             for child in self.root.iterdir():
-                if child.name == ".writer.lock":
+                if child.name.startswith(".writer.lock"):
                     continue
                 if child.is_dir():
                     shutil.rmtree(child, ignore_errors=True)
@@ -212,24 +277,30 @@ class ParquetWarehouse:
         when absence persists with no swap in flight. The Delta/Iceberg
         swap-out removes this entirely via snapshot isolation.
 
+        A declared table is read with its schema: the file listing runs
+        in this process and no Spark job starts. Any other table merges its
+        files' footers, which is one Spark job.
+
         The job ledger's table comes from its own store, as a local frame.
         """
         ledger = self._job_ledger(table)
         if ledger is not None:
             return ledger.all_jobs()
+        reader = self.spark.read
+        if table in self.schemas:
+            reader = reader.schema(self.schemas[table])
+        else:
+            # Appended/upserted batches may carry NEW columns (schema
+            # evolution — upsert unions with allowMissingColumns); without
+            # footer merging the read schema would be whichever file Spark
+            # sampled. At warehouse scale a real catalog (Delta/Iceberg)
+            # owns the schema; footer merge is the plain-parquet analogue.
+            reader = reader.option("mergeSchema", "true")
         last: Exception | None = None
         for _ in range(4):
             if self.exists(table):
                 try:
-                    # mergeSchema: appended/upserted batches may carry NEW
-                    # columns (schema evolution — upsert unions with
-                    # allowMissingColumns); without footer merging the read
-                    # schema would be whichever file Spark sampled. At
-                    # warehouse scale a real catalog (Delta/Iceberg) owns
-                    # the schema; footer merge is the plain-parquet analogue.
-                    df = self.spark.read.option("mergeSchema", "true").parquet(
-                        str(self._path(table))
-                    )
+                    df = reader.parquet(str(self._path(table)))
                     df.schema  # force file-listing/analysis now, inside the retry
                     return df
                 except Exception as e:  # noqa: BLE001 — transient listing race
@@ -245,9 +316,27 @@ class ParquetWarehouse:
             raise last
         return None
 
+    def _check_schema(self, table: str, df: DataFrame) -> None:
+        """Raise ``ValueError`` naming the first column where ``df`` and
+        ``table``'s declared schema differ in name or type (order and
+        nullability aside): a declared read would drop or mistype it
+        without a word. Undeclared tables pass."""
+        declared = self.schemas.get(table)
+        if declared is None:
+            return
+        want = {f.name: f.dataType.simpleString() for f in declared.fields}
+        got = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+        for col in sorted(want.keys() | got.keys()):
+            if want.get(col) != got.get(col):
+                raise ValueError(
+                    f"{table}: column {col!r} is {got.get(col) or 'missing'}, "
+                    f"declared {want.get(col) or 'absent'}"
+                )
+
     def append(self, table: str, df: DataFrame) -> None:
         """S7-style plain append."""
-        with self._commit_guard():
+        self._check_schema(table, df)
+        with self._commit_guard(table):
             w = df.write.mode("append")
             if table in self.partitioning:
                 w = w.partitionBy(*self.partitioning[table])
@@ -259,7 +348,7 @@ class ParquetWarehouse:
         Also dedups the incoming batch on the key (first wins — matching a
         unique-constraint insert where later conflicting rows are dropped).
         """
-        with self._commit_guard():
+        with self._commit_guard(table):
             incoming = df.dropDuplicates(key)
             existing = self.read(table)
             if existing is not None:
@@ -341,7 +430,8 @@ class ParquetWarehouse:
         rows of those partitions, and commit them. An absent table is
         written whole from ``df``; a key that does not cover the partition
         column merges and rewrites the whole table."""
-        with self._commit_guard():
+        self._check_schema(table, df)
+        with self._commit_guard(table):
             existing = self.read(table)
             if existing is None:
                 self._rewrite(table, df)

@@ -286,15 +286,15 @@ class SnapshotWarehouse(ParquetWarehouse):
 
     def append(self, table: str, df: DataFrame) -> None:
         """Append under the two-layer concurrency stack: the
-        ``_commit_guard`` flock serializes guard-using writers on this
-        host (appends from THIS codepath never actually race), while the
-        hard-link OCC claim in :meth:`_commit` is the backstop that keeps
-        history linear against writers that bypass the guard or run on
-        another host sharing the filesystem. On a lost commit race the
+        ``_commit_guard`` flocks serialize the table's guard-using writers
+        on this host (appends from THIS codepath never actually race),
+        while the hard-link OCC claim in :meth:`_commit` is the backstop
+        that keeps history linear against writers that bypass the guard or
+        run on another host sharing the filesystem. On a lost commit race the
         carried file list is re-derived from the fresh snapshot and the
         claim retried — the new data files are already on disk and
         immutable, no rewrite. Appends commute, so both writers land."""
-        with self._commit_guard():
+        with self._commit_guard(table):
             new = self._write_commit_files(table, df)
             for attempt in range(_COMMIT_RETRIES):
                 prev = self._load_manifest(table)
@@ -336,7 +336,7 @@ class SnapshotWarehouse(ParquetWarehouse):
         the seen-check is re-run after every lost race, and of two
         processes replaying one token exactly one wins the version
         link while the other re-reads and backs off."""
-        with self._commit_guard():
+        with self._commit_guard(table):
             if txn in self.committed_txns(table):
                 return False
             new = self._write_commit_files(table, df)
@@ -379,7 +379,7 @@ class SnapshotWarehouse(ParquetWarehouse):
         now. Reads anti-join the tombstones; ``compact`` materializes the
         deletes and clears the vectors. Returns the number of deleted keys.
         """
-        with self._commit_guard():
+        with self._commit_guard(table):
             prev = self._load_manifest(table)
             if prev is None or not prev["files"]:
                 return 0
@@ -406,7 +406,7 @@ class SnapshotWarehouse(ParquetWarehouse):
             return n
 
     def _rewrite(self, table: str, df: DataFrame) -> None:
-        with self._commit_guard():
+        with self._commit_guard(table):
             prev = self._load_manifest(table)
             new = self._write_commit_files(table, df)
             self._commit(
@@ -420,7 +420,7 @@ class SnapshotWarehouse(ParquetWarehouse):
         """Partition-scoped commit: new files for touched partitions, the
         previous snapshot's entries carried over (by path — no data
         movement) for every other partition."""
-        with self._commit_guard():
+        with self._commit_guard(table):
             prev = self._load_manifest(table)
             new = self._write_commit_files(table, merged)
             touched = {rel.split("/")[1] for rel in new if "/" in rel}
@@ -606,7 +606,7 @@ class SnapshotWarehouse(ParquetWarehouse):
         ``key_col`` must be a physical data column (not a hive partition
         column). Returns the number of purged keys.
         """
-        with self._commit_guard():
+        with self._commit_guard(table):
             vs = self.versions(table)
             if not vs:
                 return 0
@@ -750,7 +750,7 @@ class SnapshotWarehouse(ParquetWarehouse):
         (same as Iceberg's orphan cleanup): ``vacuum`` during an open WAP
         window deletes the staged files — match retention to audit
         duration."""
-        with self._commit_guard():
+        with self._commit_guard(table):
             new = self._write_commit_files(table, df)
             sid = uuid.uuid4().hex
             mdir = self._manifest_dir(table)
@@ -787,7 +787,7 @@ class SnapshotWarehouse(ParquetWarehouse):
         (under the writer lock), so commits that landed during the audit
         window are preserved, not clobbered. Returns the new version; the
         staged manifest is consumed."""
-        with self._commit_guard():
+        with self._commit_guard(table):
             staged = self._load_staged(table, staging_id)
             prev = self._load_manifest(table)
             carried = prev["files"] if prev else []
@@ -803,7 +803,7 @@ class SnapshotWarehouse(ParquetWarehouse):
     def discard_staged(self, table: str, staging_id: str) -> None:
         """Audit failed: drop the staged manifest and its data files
         (safe — no published manifest references them)."""
-        with self._commit_guard():
+        with self._commit_guard(table):
             staged = self._load_staged(table, staging_id)
             root = self._data_root(table)
             dirs = set()
@@ -828,7 +828,7 @@ class SnapshotWarehouse(ParquetWarehouse):
         retention horizon Delta imposes). Downstream CDF consumers must
         resync across a restore (``read_changes`` refuses the window,
         like a rewrite)."""
-        with self._commit_guard():
+        with self._commit_guard(table):
             m = self._load_manifest(table, version)
             if m is None:
                 raise ValueError(f"{table}: nothing to restore")
@@ -897,7 +897,7 @@ class SnapshotWarehouse(ParquetWarehouse):
         input — the rewrite lands in a fresh commit dir, never touching
         the files being read. Older snapshots stay readable until
         ``vacuum``."""
-        with self._commit_guard():
+        with self._commit_guard(table):
             df = self.read(table)
             if df is not None:
                 self._rewrite(table, df)
@@ -918,7 +918,7 @@ class SnapshotWarehouse(ParquetWarehouse):
         rewrite also materializes any deletion vectors."""
         from clinical_api_etl_spark.sources.layout import zorder_frame
 
-        with self._commit_guard():
+        with self._commit_guard(table):
             df = self.read(table)
             if df is not None:
                 self._rewrite(
@@ -932,7 +932,7 @@ class SnapshotWarehouse(ParquetWarehouse):
         files removed. Readers still planning against vacuumed snapshots
         will fail — run with a retention matching reader lifetimes, as
         with Delta's VACUUM."""
-        with self._commit_guard():
+        with self._commit_guard(table):
             vs = self.versions(table)
             if not vs:
                 return 0

@@ -385,3 +385,65 @@ class TestObservedQualityMetrics:
         assert m["n_non_numeric"] == 1   # 'abc'
         assert m["n_missing_unit"] == 1  # blank unit -> NULL
         assert m["n_low_quality"] == 1   # 0.5 < 0.8
+
+
+class TestConcurrentWrites:
+    """The writes after bronze run concurrently, on threads that carry the
+    caller's job group; the caller alone marks the ledger."""
+
+    TABLES = (BRONZE_TABLE, SILVER_TABLE, QUALITY_TABLE, GOLD_TABLE, "studies", "participants")
+
+    @staticmethod
+    def _rows(warehouse, table):
+        # Bronze row ids (and silver's copies) are fresh uuids per run.
+        df = warehouse.read(table).drop("id", "raw_row_id")
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    def test_failed_write_fails_job_and_retry_equals_clean_run(self, spark, warehouse, tmp_path, monkeypatch):
+        from clinical_api_etl_spark.jobs.ledger import JobLedger
+        from clinical_api_etl_spark.sources.sinks import ParquetWarehouse, clinical_warehouse
+
+        path = _write_csv(tmp_path, "mixed.csv", HAPPY + BP + EDGE)
+
+        def boom(self, table, df, key):
+            raise RuntimeError("gold merge failed")
+
+        monkeypatch.setattr(ParquetWarehouse, "merge_aggregations", boom)
+        with pytest.raises(RuntimeError, match="gold merge failed"):
+            process_job(spark, warehouse, path, job_id="job-r")
+        row = JobLedger(warehouse).fetch("job-r")
+        assert (row.status, row.message, row.progress) == ("failed", "gold merge failed", 100)
+        monkeypatch.undo()
+
+        process_job(spark, warehouse, path, job_id="job-r")
+        assert JobLedger(warehouse).fetch("job-r").status == "completed"
+        clean = clinical_warehouse(spark, str(tmp_path / "clean"))
+        process_job(spark, clean, path, job_id="job-r")
+        for table in self.TABLES:
+            assert self._rows(warehouse, table) == self._rows(clean, table), table
+
+    def test_every_spark_job_runs_in_the_callers_job_group(self, spark, warehouse, tmp_path, spark_jobs):
+        path = _write_csv(tmp_path, "grouped.csv", HAPPY + BP)
+        _, started = spark_jobs.started(
+            lambda: spark_jobs.in_group("g", lambda: process_job(spark, warehouse, path))
+        )
+        assert started and started <= spark_jobs.of_group("g")
+        assert not started & spark_jobs.of_group(None)
+
+    def test_progress_never_falls_and_only_the_caller_marks(self, spark, warehouse, tmp_path, monkeypatch):
+        import threading
+
+        from clinical_api_etl_spark.jobs.ledger import JobLedger
+
+        marks = []
+        real_mark = JobLedger.mark
+
+        def mark(self, job_id, status, message=None, progress=None):
+            marks.append((threading.get_ident(), progress))
+            real_mark(self, job_id, status, message, progress)
+
+        monkeypatch.setattr(JobLedger, "mark", mark)
+        process_job(spark, warehouse, _write_csv(tmp_path, "prog.csv", HAPPY), job_id="job-p")
+        # 45 before the five concurrent writes, +9 as each ends, 100 at the end.
+        assert [p for _, p in marks] == [10, 30, 45, 54, 63, 72, 81, 90, 100]
+        assert {t for t, _ in marks} == {threading.get_ident()}

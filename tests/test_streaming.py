@@ -1665,3 +1665,18 @@ class TestStreamingCdcApply:
             for r in pwh.read("cdc_mv").collect()
         }
         assert got == batch
+
+
+class TestStreamJobGroup:
+    def test_every_batch_job_runs_in_the_run_id_group(self, spark, warehouse, tmp_path, spark_jobs):
+        """A batch's concurrent writes carry the stream's job group, so the
+        query's ``runId`` counts every Spark job the stream starts."""
+        drop = _drop(tmp_path, "g1.csv", [
+            "S1,P1,glucose,95.5,mg/dL,2024-01-15T09:30:00Z,SITE_A,0.98",
+            "S1,P1,blood_pressure,120/80,mmHg,2024-01-15T09:31:00Z,SITE_A,0.97",
+        ])
+        q, started = spark_jobs.started(
+            lambda: run_ingest_stream(spark, warehouse, drop, str(tmp_path / "gckpt"))
+        )
+        assert warehouse.read(GOLD_TABLE).count() == 3  # glucose, BP systolic and diastolic
+        assert started and started <= spark_jobs.of_group(str(q.runId))

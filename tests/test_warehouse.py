@@ -1,18 +1,21 @@
 """Partition-scoped merge behavior of ParquetWarehouse: merges touch only
 the partitions present in the incoming batch (untouched partition files
-stay byte-identical), results equal the whole-table merge semantics, and
-in-process writers serialize.
+stay byte-identical), results equal the whole-table merge semantics,
+writers of one table serialize while writers of different tables overlap,
+and declared schemas are read without a Spark job and enforced on write.
 """
 
 from __future__ import annotations
 
 import hashlib
 import threading
+import time
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from clinical_api_etl_spark.sources import sinks
 from clinical_api_etl_spark.sources.sinks import ParquetWarehouse
 
 
@@ -248,3 +251,139 @@ class TestScd2Merge:
         )
         state = {r["study_id"]: r["status"] for r in asof.collect()}
         assert state == {"s1": "paused", "s2": "active", "s3": "recruiting"}
+
+
+class TestPerTableWriters:
+    """``_commit_guard(table)``: writers of different tables overlap,
+    writers of one table and ``reset`` exclude each other."""
+
+    @staticmethod
+    def _hold(pwh, table, spans, started=None, hold_s=0.4):
+        with pwh._commit_guard(table):
+            t0 = time.monotonic()
+            if started is not None:
+                started.set()
+            time.sleep(hold_s)
+            spans.append((t0, time.monotonic()))
+
+    def _run(self, pwh, tables):
+        spans: list[tuple[float, float]] = []
+        ts = [threading.Thread(target=self._hold, args=(pwh, t, spans)) for t in tables]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join()
+        return sorted(spans)
+
+    def test_writers_of_different_tables_overlap(self, pwh):
+        (s1, e1), (s2, e2) = self._run(pwh, ["a", "b"])
+        assert s2 < e1, "writers of two tables ran one after the other"
+
+    def test_writers_of_one_table_never_overlap(self, pwh):
+        spans = self._run(pwh, ["a"] * 4)
+        assert all(e <= s for (_, e), (s, _) in zip(spans, spans[1:])), spans
+
+    def test_reset_waits_for_an_inflight_writer(self, pwh):
+        spans: list[tuple[float, float]] = []
+        started = threading.Event()
+        w = threading.Thread(target=self._hold, args=(pwh, "a", spans, started))
+        w.start()
+        started.wait()
+        pwh.reset()
+        reset_done = time.monotonic()
+        w.join()
+        assert spans[0][1] <= reset_done
+
+    def test_writer_waits_for_reset(self, pwh, monkeypatch):
+        (pwh.root / "old_table").mkdir()
+        inside, reset_span = threading.Event(), []
+        real_rmtree = sinks.shutil.rmtree
+
+        def slow_rmtree(path, *args, **kwargs):
+            t0 = time.monotonic()
+            inside.set()
+            time.sleep(0.4)
+            real_rmtree(path, *args, **kwargs)
+            reset_span.append((t0, time.monotonic()))
+
+        monkeypatch.setattr(sinks.shutil, "rmtree", slow_rmtree)
+        r = threading.Thread(target=pwh.reset)
+        r.start()
+        inside.wait()
+        spans: list[tuple[float, float]] = []
+        self._hold(pwh, "a", spans, hold_s=0)
+        r.join()
+        assert reset_span and reset_span[0][1] <= spans[0][0]
+
+    def test_reset_keeps_every_lock_file(self, spark, pwh):
+        df = spark.createDataFrame([("s1", "p1", 1.0)], "study_id string, participant_id string, v double")
+        pwh.upsert("gold", df, ["study_id", "participant_id"])
+        locks = {p.name: p.stat().st_ino for p in pwh.root.glob(".writer.lock*")}
+        assert set(locks) == {".writer.lock", ".writer.lock.gold"}
+        pwh.reset()
+        assert {p.name: p.stat().st_ino for p in pwh.root.glob(".writer.lock*")} == locks
+        assert pwh.read("gold") is None
+
+    def test_whole_warehouse_guard_cannot_nest_in_a_table_guard(self, pwh):
+        with pwh._commit_guard("a"):
+            with pwh._commit_guard("a"), pwh._commit_guard("b"):
+                pass
+            with pytest.raises(RuntimeError, match="whole-warehouse"):
+                with pwh._commit_guard():
+                    pass
+        with pwh._commit_guard(), pwh._commit_guard("a"):
+            pass  # a table guard nests inside the whole-warehouse guard
+
+
+class TestDeclaredSchemas:
+    """The clinical tables are read with their declared schemas; a write
+    that would not read back as written raises before any Spark job."""
+
+    TABLE = "data_quality_reports"
+    DDL = "job_id string, rule_name string, severity string, affected_rows long"
+
+    def _seed(self, spark, warehouse):
+        warehouse.append(self.TABLE, spark.createDataFrame([("j1", "r", "warn", 3)], self.DDL))
+        return sorted(warehouse.read(self.TABLE).collect()), _file_digests(warehouse.root / self.TABLE)
+
+    @pytest.mark.parametrize(
+        "ddl, rows, column",
+        [
+            (DDL + ", extra string", [("j2", "r", "warn", 1, "x")], "extra"),
+            ("job_id string, rule_name string, severity string, affected_rows int", [("j2", "r", "warn", 1)], "affected_rows"),
+        ],
+        ids=["extra_column", "wrong_type"],
+    )
+    def test_mismatched_append_raises_and_leaves_table(self, spark, warehouse, spark_jobs, ddl, rows, column):
+        before = self._seed(spark, warehouse)
+        df = spark.createDataFrame(rows, ddl)
+        for write in (
+            lambda: warehouse.append(self.TABLE, df),
+            lambda: warehouse.append_if_absent(self.TABLE, df, ["job_id", "rule_name"]),
+            lambda: warehouse.upsert(self.TABLE, df, ["job_id", "rule_name"]),
+        ):
+            with pytest.raises(ValueError, match=repr(column)):
+                spark_jobs.in_group("bad-write", write)
+        assert spark_jobs.of_group("bad-write") == set()
+        assert (sorted(warehouse.read(self.TABLE).collect()), _file_digests(warehouse.root / self.TABLE)) == before
+
+    def test_mistyped_merge_raises_and_leaves_table(self, spark, warehouse):
+        cols = "study_id string, participant_id string, site_id string, measurement_type string, cnt long, avg_num double, min_num double, max_num double, job_id string"
+        gold = "measurement_aggregations"
+        key = ["study_id", "participant_id", "site_id", "measurement_type"]
+        warehouse.merge_aggregations(gold, spark.createDataFrame([("s1", "p1", "x", "hr", 2, 1.0, 1.0, 1.0, "j1")], cols), key)
+        before = sorted(warehouse.read(gold).collect())
+        bad = spark.createDataFrame([("s1", "p1", "x", "hr", 2, 1.0, 1.0, 1.0, 7)], cols.replace("job_id string", "job_id int"))
+        with pytest.raises(ValueError, match="'job_id'"):
+            warehouse.merge_aggregations(gold, bad, key)
+        assert sorted(warehouse.read(gold).collect()) == before
+
+    def test_declared_read_starts_no_spark_job(self, spark, warehouse, spark_jobs):
+        self._seed(spark, warehouse)
+        df = spark_jobs.in_group("declared-read", lambda: warehouse.read(self.TABLE))
+        assert df.columns == ["job_id", "rule_name", "severity", "affected_rows"]
+        assert spark_jobs.of_group("declared-read") == set()
+        # An undeclared table still merges footers, which the counter sees.
+        warehouse.append("undeclared", spark.range(3))
+        spark_jobs.in_group("merged-read", lambda: warehouse.read("undeclared"))
+        assert spark_jobs.of_group("merged-read")
