@@ -88,19 +88,23 @@ def run_pipeline(warehouse: ParquetWarehouse, raw: DataFrame, job_id: str, *, di
     """The stage sequence of every job over its normalised input ``raw``.
 
     An invalid input fails the job whole: the check pass writes nothing.
-    Every write is keyed-idempotent (bronze/silver/quality by natural key,
-    gold via the S8 merge), so a retried job id re-writes nothing. An
-    upload's ledger row exists before its CSV is read; a stream batch gets
-    its row here, named for its files, unless it is empty. ``dims=False``
-    (the stream) writes no ``studies`` or ``participants``. Any exception
-    marks the job failed (etl.py:264-266).
+    An input with no rows writes nothing either: an upload's job completes,
+    and an empty stream batch is no job at all. Every write is
+    keyed-idempotent (bronze/silver/quality by natural key, gold via the S8
+    merge), so a retried job id re-writes nothing. An upload's ledger row
+    exists before its CSV is read; a stream batch gets its row here, named
+    for its files. ``dims=False`` (the stream) writes no ``studies`` or
+    ``participants``. Any exception marks the job failed (etl.py:264-266).
     """
     ledger = JobLedger(warehouse)
     try:
         checks = validate_quality_scores(raw)
-        if ledger.fetch(job_id) is None:
-            if not checks.rows:
-                return
+        has_row = ledger.fetch(job_id) is not None
+        if not checks.rows:
+            if has_row:
+                ledger.mark(job_id, "completed", "no rows", progress=100)
+            return
+        if not has_row:
             ledger.submit(",".join(checks.files), job_id=job_id)
         if checks.error:
             raise ClinicalCsvError(checks.error)

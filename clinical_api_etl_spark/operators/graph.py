@@ -1352,12 +1352,11 @@ def _weak_cc_labels(
             .localCheckpoint(eager=False)
         )
 
-    # CONTRACT-THEN-FINISH (the streaming/components.py discipline, and
-    # the big cost cut): two bounded propagation rounds shrink the label
-    # set (each label = min over a 2-hop-plus-jump neighborhood), then
-    # the residual merging collapses to the DISTINCT cross-label pair
-    # set — typically orders of magnitude below |E| — which a driver
-    # union-find finishes exactly. Exactness: every partial label is
+    # CONTRACT-THEN-FINISH (the big cost cut): two bounded propagation
+    # rounds shrink the label set (each label = min over a 2-hop-plus-jump
+    # neighborhood), then the residual merging collapses to the DISTINCT
+    # cross-label pair set — typically orders of magnitude below |E| —
+    # which a driver union-find finishes exactly. Exactness: every partial label is
     # >= its component's min node M, and M keeps label M, so the min
     # representative of each label-graph component IS M; composing
     # node -> partial -> root therefore reproduces the exact min-label

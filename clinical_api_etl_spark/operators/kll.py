@@ -9,9 +9,9 @@ below the top — with the random compaction coin replaced by a
 PER-LEVEL ALTERNATING PARITY (the Manku-Rajagopalan-Lindsay deterministic
 discipline). Every operation is integer-exact and a pure function of the
 insertion/merge order, so a replayed fold reproduces the sketch BIT FOR
-BIT — which is what lets the streaming MV (streaming/quantiles.py) gate
-snapshot == batch bitwise, while the statistical contract (rank error)
-is gated like the GK percentile bound.
+BIT — so per-partition sketches rebuilt from the same rows are identical,
+while the statistical contract (rank error) is gated like the GK
+percentile bound.
 
 Properties kept exactly:
 - total weight == number of inserted values (compaction pairs 2j items of

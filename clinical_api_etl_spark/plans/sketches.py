@@ -1,7 +1,6 @@
 """Mergeable-sketch queries: the deterministic KLL quantile ladder. [EXT]
 
-VERDICT r09 task 7 (batch face; the streaming MV twin lives in
-``streaming/quantiles.py``). Gate pattern = the GK percentile gate
+VERDICT r09 task 7 (batch face). Gate pattern = the GK percentile gate
 (``f_percentile_approx``): the oracle hard-codes the rank-ok booleans
 TRUE next to exact BIGINT components, so a hash mismatch means the
 sketch breached its padded rank bound — a tolerance breach, not an

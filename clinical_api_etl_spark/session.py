@@ -70,6 +70,11 @@ def get_spark(
         # numeric-looking study_id/job_id partition to int on read and break
         # schema stability of the warehouse tables.
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
+        # List partition directories in the driver, never as a Spark job: in
+        # local[N] a listing job runs on this host's threads anyway, and past
+        # the default threshold (32) every read of a table partitioned by
+        # job_id would pay for one.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
         # Naive (isAdjustedToUTC=false) parquet timestamps read as TIMESTAMP,
         # not TIMESTAMP_NTZ: with the session pinned to UTC the values are
         # identical, every downstream temporal expression (unix_millis,

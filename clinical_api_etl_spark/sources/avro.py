@@ -24,7 +24,7 @@ Implemented subset (covers the engine's tables end to end):
   with a clear error;
 * the writer emits one self-contained OCF file per partition under a
   two-phase commit (stage ``_tmp-*``, driver renames winners to
-  ``part-*.avro`` — the ``jsonl_sink`` pattern in ``pyds.py``).
+  ``part-*.avro``).
 
 100 TB posture — the reader is **split-parallel, not file-parallel**:
 OCF interleaves a 16-byte random sync marker between blocks precisely so
@@ -616,9 +616,9 @@ class _AvroCommit(WriterCommitMessage):
 
 
 class _AvroWriter(DataSourceWriter):
-    """One OCF file per partition + two-phase commit (jsonl_sink pattern:
-    executors stage ``_tmp-*``, the driver renames winners — losing task
-    attempts never publish)."""
+    """One OCF file per partition + two-phase commit (executors stage
+    ``_tmp-*``, the driver renames winners — losing task attempts never
+    publish)."""
 
     def __init__(self, options, schema, overwrite: bool) -> None:
         self.path = options.get("path")

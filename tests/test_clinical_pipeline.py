@@ -9,6 +9,7 @@ natural keys, and re-ingest idempotency/merge semantics.
 
 from __future__ import annotations
 
+import hashlib
 from decimal import Decimal
 
 import pytest
@@ -293,6 +294,28 @@ class TestQuotedJobId:
         assert silver.filter(silver.job_id == jid).count() == 6
 
 
+class TestNoRowUpload:
+    @pytest.mark.parametrize("prior", [False, True], ids=["fresh", "non_empty"])
+    def test_header_only_upload_completes_and_writes_nothing(self, spark, warehouse, tmp_path, prior):
+        """An upload with no rows is no work: its job completes at 100 and
+        no parquet file in the warehouse is added or changed."""
+        from clinical_api_etl_spark.jobs.ledger import JobLedger
+
+        def parquet_files():
+            return {
+                str(p.relative_to(warehouse.root)): hashlib.md5(p.read_bytes()).hexdigest()
+                for p in warehouse.root.rglob("*.parquet")
+            }
+
+        if prior:
+            process_job(spark, warehouse, _write_csv(tmp_path, "happy.csv", HAPPY), job_id="job-1")
+        before = parquet_files()
+        process_job(spark, warehouse, _write_csv(tmp_path, "empty.csv", []), job_id="job-empty")
+        row = JobLedger(warehouse).fetch("job-empty")
+        assert (row.status, row.progress) == ("completed", 100)
+        assert parquet_files() == before
+
+
 class TestPartitionedWarehouse:
     def test_partition_pruning_and_schema_stability(self, spark, tmp_path):
         """Blueprint layout: bronze partitioned by job_id, silver by
@@ -356,35 +379,6 @@ class TestQualityScoreCheckParity:
         )
         process_job(spark, warehouse, csv)
         assert warehouse.read(BRONZE_TABLE).count() == 5
-
-
-class TestObservedQualityMetrics:
-    def test_observe_rides_the_write_action(self, spark, tmp_path):
-        """observe() counters equal a separate quality aggregation, but are
-        collected by the SAME action that writes silver — no extra scan."""
-        from clinical_api_etl_spark.operators.clinical import (
-            build_silver,
-            stage_bronze,
-        )
-        from clinical_api_etl_spark.operators.observe import observe_silver_quality
-        from clinical_api_etl_spark.sources.clinical_csv import read_clinical_csv
-
-        csv = tmp_path / "obs.csv"
-        csv.write_text(
-            "study_id,participant_id,measurement_type,value,unit,timestamp,site_id,quality_score\n"
-            "S1,P1,glucose,95.5,mg/dL,2024-01-15T09:30:00Z,SITE_A,0.98\n"
-            "S1,P2,glucose,abc,mg/dL,2024-01-15T09:31:00Z,SITE_A,0.5\n"
-            "S1,P3,weight,70.1,,2024-01-15T09:32:00Z,SITE_A,0.9\n"
-        )
-        raw = read_clinical_csv(spark, str(csv))
-        silver = build_silver(stage_bronze(raw, job_id="obs-1", source_filename="obs.csv"))
-        observed, obs = observe_silver_quality(silver)
-        observed.write.mode("overwrite").parquet(str(tmp_path / "out"))
-        m = obs.get
-        assert m["n_rows"] == 3
-        assert m["n_non_numeric"] == 1   # 'abc'
-        assert m["n_missing_unit"] == 1  # blank unit -> NULL
-        assert m["n_low_quality"] == 1   # 0.5 < 0.8
 
 
 class TestConcurrentWrites:

@@ -1,11 +1,9 @@
-"""Deterministic KLL sketch (operators/kll.py), the batch gate query
-(plans/sketches.py) and the streaming MV twin (streaming/quantiles.py):
-weight conservation, rank-error bound, fold/merge determinism, and the
-snapshot == batch bitwise contract under in-order arrival."""
+"""Deterministic KLL sketch (operators/kll.py) and the batch gate query
+(plans/sketches.py): weight conservation, rank-error bound, fold/merge
+determinism, and estimates that replay exactly from the partial rows."""
 
 from __future__ import annotations
 
-import json
 import random
 
 import pytest
@@ -93,90 +91,3 @@ class TestKLLBatchQuery:
         spark.catalog.clearCache()
         merged = kll_merge_rows(parts)
         assert merged.n() == rows[0].n
-
-
-class TestStreamingQuantiles:
-    def _write_drops(self, spark, src_dir, drop, n_files=3):
-        """Split sf0.001 events into n_files ts-ordered json drops."""
-        from clinical_api_etl_spark.sources.catalog import load
-        from pyspark.sql import functions as F
-
-        ev = (
-            load(spark, src_dir, "events")
-            .filter(F.col("value").isNotNull())
-            .select("event_id", "ts", "user_id", "event_type", "value")
-            .orderBy("ts", "event_id")
-            .collect()
-        )
-        spark.catalog.clearCache()
-        drop.mkdir(parents=True, exist_ok=True)
-        chunk = (len(ev) + n_files - 1) // n_files
-        for i in range(n_files):
-            with open(drop / f"part{i}.json", "w") as f:
-                for r in ev[i * chunk : (i + 1) * chunk]:
-                    f.write(
-                        json.dumps(
-                            {
-                                "event_id": r.event_id,
-                                "ts": r.ts.strftime("%Y-%m-%dT%H:%M:%S.%f"),
-                                "user_id": r.user_id,
-                                "event_type": r.event_type,
-                                "value": r.value,
-                            }
-                        )
-                        + "\n"
-                    )
-        return len(ev)
-
-    def test_stream_equals_batch_bitwise(self, spark, tmp_path):
-        from clinical_api_etl_spark.plans.sketches import kll_events_sketch_rows
-        from clinical_api_etl_spark.streaming.quantiles import StreamingQuantiles
-
-        sf = "/root/testdata/sf0.001"
-        drop = tmp_path / "drops"
-        n = self._write_drops(spark, sf, drop)
-        mv = StreamingQuantiles(spark, str(tmp_path / "kllmv"))
-        mv.run_stream(str(drop))  # one availableNow pass over all files
-        snap = {(r["day"], r["shard"]): r["sketch"] for r in mv.snapshot().collect()}
-        batch = {
-            (r["day"], r["shard"]): r["sketch"]
-            for r in kll_events_sketch_rows(spark, sf).collect()
-        }
-        spark.catalog.clearCache()
-        assert snap == batch  # bit-for-bit under in-order arrival
-        merged = kll_merge_rows(
-            [
-                {"day": d, "shard": s, "sketch": sk}
-                for (d, s), sk in snap.items()
-            ]
-        )
-        assert merged.n() == n
-        assert mv.quantiles() == {
-            q: kll_merge_rows(
-                [
-                    {"day": d, "shard": s, "sketch": sk}
-                    for (d, s), sk in batch.items()
-                ]
-            ).quantile(q, 10)
-            for q in range(1, 10)
-        }
-
-    def test_replayed_txn_is_dropped(self, spark, tmp_path):
-        from clinical_api_etl_spark.sources.catalog import load
-        from clinical_api_etl_spark.streaming.quantiles import StreamingQuantiles
-
-        drop = tmp_path / "d2"
-        self._write_drops(spark, "/root/testdata/sf0.001", drop, n_files=1)
-        mv = StreamingQuantiles(spark, str(tmp_path / "kllmv2"))
-        mv.run_stream(str(drop))
-        before = {
-            (r["day"], r["shard"]): r["sketch"] for r in mv.snapshot().collect()
-        }
-        # a manual replay of batch 0's exact txn id must be a no-op
-        ev = load(spark, "/root/testdata/sf0.001", "events").limit(5)
-        mv._apply_batch(ev, "kll-checkpoint-0")
-        after = {
-            (r["day"], r["shard"]): r["sketch"] for r in mv.snapshot().collect()
-        }
-        spark.catalog.clearCache()
-        assert before == after

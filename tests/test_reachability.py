@@ -33,14 +33,10 @@ ROOTS = (
 UNREACHED = {
     "functions.tablefuncs",
     "operators.mv",
-    "operators.observe",
     "sources.fileindex",
     "sources.jsonl",
-    "sources.manifest_jsonl",
-    "sources.pyds",
     "sources.snapshots",
     "streaming.annindex",
-    "streaming.components",
     "streaming.corpus",
     "streaming.datacard",
     "streaming.drift",
@@ -48,7 +44,6 @@ UNREACHED = {
     "streaming.funnelmon",
     "streaming.invindex",
     "streaming.neardup",
-    "streaming.quantiles",
 }
 
 

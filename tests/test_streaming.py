@@ -735,45 +735,6 @@ class TestTransformWithState:
         assert results["tws"], "empty funnel output"
 
 
-class TestStreamingObservedMetrics:
-    def test_observed_metrics_per_microbatch(self, spark, tmp_path):
-        """observe() on a streaming DataFrame surfaces per-batch quality
-        counters in StreamingQueryProgress.observedMetrics — the free
-        monitoring hook (no extra pass over the data)."""
-        from clinical_api_etl_spark.sources.catalog import load
-        from clinical_api_etl_spark.operators.observe import observe_stream
-
-        sf = "/root/testdata/sf0.001"
-        events = load(spark, sf, "events")
-        src_dir = str(tmp_path / "obs_parquet")
-        events.write.parquet(src_dir)
-
-        stream = spark.readStream.schema(events.schema).parquet(src_dir)
-        observed = observe_stream(
-            stream,
-            "ingest_quality",
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.when(F.col("value").isNull(), 1).otherwise(0)).alias(
-                "n_null_value"
-            ),
-        )
-        q = (
-            observed.writeStream.format("noop")
-            .option("checkpointLocation", str(tmp_path / "obsckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        metrics = [
-            p.observedMetrics["ingest_quality"]
-            for p in (q.recentProgress or [])
-            if "ingest_quality" in (p.observedMetrics or {})
-        ]
-        assert metrics, "no observed metrics in progress"
-        assert sum(m["n_rows"] for m in metrics) == events.count()
-        assert all(m["n_null_value"] == 0 for m in metrics)
-
-
 class TestStreamStaticJoin:
     def test_stream_enriched_by_broadcast_dim_equals_batch(self, spark, tmp_path):
         """Stream-static enrichment: a file-source event stream joined to a

@@ -114,7 +114,7 @@ class TestPartitionScopedMergeAggregations:
 
 class TestWriterSerialization:
     def test_concurrent_upserts_lose_no_rows(self, spark, pwh):
-        """Background API jobs upsert concurrently; the per-warehouse lock
+        """Background API jobs upsert concurrently; the table's writer lock
         serializes them so every job's row lands (api.py submits daemon
         threads — the reference gets this from Postgres transactions)."""
         errors: list[Exception] = []
@@ -383,6 +383,14 @@ class TestDeclaredSchemas:
         df = spark_jobs.in_group("declared-read", lambda: warehouse.read(self.TABLE))
         assert df.columns == ["job_id", "rule_name", "severity", "affected_rows"]
         assert spark_jobs.of_group("declared-read") == set()
+        # Past Spark's default parallel-discovery threshold (32 directories),
+        # bronze's job_id partitions are still listed without a job.
+        bronze = "staging_clinical_measurements"
+        rows = [(f"r{i}", "f.csv", 1, "s1", "p1", "hr", "70", "bpm", None, "A", 0.9, f"job-{i}") for i in range(40)]
+        warehouse.append(bronze, spark.createDataFrame(rows, sinks.CLINICAL_SCHEMAS[bronze]))
+        assert len(list((warehouse.root / bronze).glob("job_id=*"))) == 40
+        spark_jobs.in_group("declared-read-40", lambda: warehouse.read(bronze))
+        assert spark_jobs.of_group("declared-read-40") == set()
         # An undeclared table still merges footers, which the counter sees.
         warehouse.append("undeclared", spark.range(3))
         spark_jobs.in_group("merged-read", lambda: warehouse.read("undeclared"))
